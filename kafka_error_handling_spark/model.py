@@ -39,6 +39,7 @@ __all__ = [
     "DEAD_LETTER_SCHEMA",
     "ProcessingException",
     "RecordTooLargeError",
+    "ResultTypeError",
     "is_recoverable",
     "render_value",
     "error_payload",
@@ -125,6 +126,15 @@ class RecordTooLargeError(ValueError):
     """Analog of Kafka's ``RecordTooLargeException`` — message-specific,
     so NOT recoverable even though it originates in the transport layer
     (reference ``ErrorUtil.java:72-92`` excludes it from the recoverable set).
+    """
+
+
+class ResultTypeError(TypeError):
+    """A wrapped function returned a value that does not convert to the
+    declared result type (a ``str`` for an ``int`` column, ``2**40`` for
+    ``int``, ``1.5`` for ``bigint``).  Raised by the record loop for that one
+    record and handled exactly like an exception from the function; a data
+    error, so not recoverable.
     """
 
 

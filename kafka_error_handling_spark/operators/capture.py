@@ -16,13 +16,26 @@ Shared semantics, identical to the reference:
   otherwise emit a NULL result with a populated ``error`` struct;
 - exceptions that are not ``Exception`` (``KeyboardInterrupt``,
   ``SystemExit``, … — the Python analog of Java ``Error``/``Throwable``)
-  are never caught (``ErrorCapturingKeyValueMapperTopologyTest.java:117-125``).
+  are never caught (``ErrorCapturingKeyValueMapperTopologyTest.java:117-125``);
+- a result that does not convert to the declared result type is handled
+  exactly like an exception from the wrapped function, as a
+  :class:`~kafka_error_handling_spark.model.ResultTypeError` (in Java the
+  mapper's generic types make such a result impossible).
 
 Architecture notes (scale):
 
-- The wrapped Python function is the slow path by definition; it runs inside
-  an **Arrow-batched pandas UDF with a per-row loop**, so one bad row poisons
-  neither the batch nor the task, while JVM↔Python transfer stays vectorized.
+- Capture, log and describe share one record loop over Arrow batches, with
+  no pandas in between: column shapes run it in a nondeterministic
+  ``arrow_udf`` (``ArrowEvalPython``), processor shapes in ``mapInArrow``.
+  Inputs are read with ``to_pylist()``, so SQL NULL reaches the function as
+  ``None`` and a NaN double as NaN, at every type.
+- Results convert to Arrow in one ``pa.array(results, type)`` call.  Only
+  when that raises does the loop convert row by row, so one wrong-typed
+  result costs one error row, not the task, and the healthy path pays
+  nothing.  Floats bound for integral fields are checked first: pyarrow
+  would truncate them silently.
+- Processor pass-through columns never leave Arrow: the output batch is the
+  input's ``take(row_index)`` plus the result and error columns.
 - Capture UDFs are marked ``asNondeterministic()`` so Catalyst never
   duplicates them into both the success and the error branch — the wrapped
   function must run exactly once per record (SURVEY.md §4).
@@ -33,18 +46,30 @@ Architecture notes (scale):
 
 from __future__ import annotations
 
+import reprlib
+from numbers import Integral, Number
+from operator import itemgetter
 from typing import Any, Callable, Iterable, Optional, Sequence, Union
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DataType, StructField, StructType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegralType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from ..model import (
     ERROR_SCHEMA,
     ErrorFilter,
+    ResultTypeError,
     error_payload,
     is_recoverable,
     processed_schema,
@@ -69,27 +94,14 @@ __all__ = [
 RESULT_COL = "result"
 ERROR_COL = "error"
 
-
-def _norm(v: Any) -> Any:
-    """Normalize pandas null sentinels (NaN / NaT / NA) to None for the user
-    fn — Arrow hands nullable numeric columns to pandas as float NaN, which
-    must read as the reference's Java null.  (Genuine NaN doubles are also
-    mapped to None; Spark itself blurs this at the Arrow boundary.)"""
-    if v is None:
-        return None
-    if v is pd.NaT or v is pd.NA:
-        return None
-    if isinstance(v, float) and v != v:
-        return None
-    return v
+_ERROR_ARROW = to_arrow_type(ERROR_SCHEMA)
+_CONVERT_ERRORS = (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError)
 
 
 def _drop_payload(exc: Exception) -> dict:
     """Minimal error payload for the log-and-drop path: the error row is
-    filtered out immediately, so skip the (expensive) traceback rendering.
-    Shared by _run_one and the inlined single-arg hot loop so the shape
-    can't drift between the two (a fresh dict per call — rows must not
-    alias one mutable payload)."""
+    filtered out immediately, so skip the (expensive) traceback rendering
+    (a fresh dict per call — rows must not alias one mutable payload)."""
     return {
         "input_value": None,
         "error_class": type(exc).__name__,
@@ -98,102 +110,186 @@ def _drop_payload(exc: Exception) -> dict:
     }
 
 
-def _run_one(
-    fn: Callable[..., Any],
-    args: Sequence[Any],
-    rendered_input: Any,
-    error_filter: ErrorFilter,
-    full_payload: bool = True,
-):
-    """One record through the wrapped fn → (result, error_dict)."""
+def _pylist(col: pa.Array) -> list:
+    """One Arrow column as Python values.  Maps become dicts, as in a Spark
+    ``Row`` (pyarrow lists them as key/value tuples)."""
+    vals = col.to_pylist()
+    if pa.types.is_map(col.type):
+        return [None if v is None else dict(v) for v in vals]
+    return vals
+
+
+def _non_integral(v: Any) -> bool:
+    """A number pyarrow would truncate into an integral type (``1.5`` → ``1``)."""
+    if type(v) is int or not isinstance(v, Number) or isinstance(v, Integral):
+        return False
     try:
-        return fn(*args), None
-    except Exception as exc:  # noqa: BLE001 — Throwables pass through untouched
-        if error_filter(exc):
-            raise
-        if not full_payload:
-            return None, _drop_payload(exc)
-        return None, error_payload(rendered_input, exc)
+        return v != int(v)
+    except (TypeError, ValueError, OverflowError):
+        return False  # NaN, inf, complex: pyarrow rejects these itself
 
 
-def _norm_for(series: pd.Series) -> Optional[Callable[[Any], Any]]:
-    """Pick the cheapest null-normalizer for a batch column, ONCE per batch.
+def _truncated(t: DataType) -> Optional[Callable[[Any], bool]]:
+    """Predicate for results pyarrow would convert into ``t`` with silent
+    loss: a non-integral number where ``t`` has an integral type, at any
+    depth (``pa.array([1.5], pa.int64())`` is ``[1]``).  None when ``t`` has
+    no integral part."""
+    if isinstance(t, IntegralType):
+        return _non_integral
+    if isinstance(t, ArrayType):
+        el = _truncated(t.elementType)
+        return el and (lambda v: isinstance(v, (list, tuple)) and any(map(el, v)))
+    if isinstance(t, MapType):
+        k, w = _truncated(t.keyType), _truncated(t.valueType)
+        if not (k or w):
+            return None
+        return lambda v: isinstance(v, dict) and any(
+            (k and k(a)) or (w and w(b)) for a, b in v.items()
+        )
+    if isinstance(t, StructType):
+        fs = [(i, f.name, p) for i, f in enumerate(t.fields) if (p := _truncated(f.dataType))]
+        if not fs:
+            return None
+        return lambda v: any(
+            p(v.get(n)) if isinstance(v, dict) else isinstance(v, tuple) and i < len(v) and p(v[i])
+            for i, n, p in fs
+        )
+    return None
 
-    Arrow→pandas null sentinels are dtype-determined: float dtypes carry
-    NaN, datetime dtypes carry NaT, everything else (strings, structs,
-    lists arrive as object dtype) carries plain ``None``.  Only the float
-    and datetime cases need per-row normalization — running the generic
-    isinstance chain on every row of every column costs ~0.3 µs/row, which
-    is real money inside the capture hot loop (VERDICT r2 #6)."""
-    kind = series.dtype.kind
-    if kind == "f":
-        return lambda v: None if v != v else v
-    if kind in ("M", "m"):
-        return lambda v: None if v is pd.NaT else v
-    if kind in ("i", "u", "b"):
-        return None  # non-nullable numpy dtypes carry no null sentinel
-    if series.dtype == object:
-        return None  # Arrow yields plain None for nulls in object columns
-    return _norm
+
+class _RecordLoop:
+    """The per-record wrapper every family runs, one Arrow batch at a time.
+
+    Each record (a tuple of arguments) goes through ``fn`` exactly once —
+    through ``wrap``, the log or describe layer, when given.  An
+    ``Exception`` becomes an error row whose ``input_value`` is
+    ``value(args)``, or propagates when ``error_filter`` says so.  A result
+    that does not convert to ``result_type`` is handled the same way, as a
+    :class:`ResultTypeError` that is first raised through the same ``wrap``
+    instance (without calling ``fn`` again), so log and describe see it like
+    an exception from ``fn``.  With ``forwards``, ``fn`` returns 0..n results
+    per record (processor shapes), drained inside the call so that a
+    generator failing halfway is a failure of its record; otherwise exactly
+    one result.
+    """
+
+    def __init__(self, fn, result_type, error_filter, full_payload=True, wrap=None,
+                 forwards=False, value=itemgetter(-1)):
+        if not callable(fn):
+            # build-time contract: the reference throws NPE from the factory
+            # on null args (ErrorCapturingKeyValueMapperTopologyTest.java:79-91)
+            raise TypeError(f"wrapped function must be callable, got {type(fn).__name__}")
+        if isinstance(result_type, str):
+            result_type = DataType.fromDDL(result_type)
+        self.fn = _as_list(fn) if forwards else fn
+        self.forwards, self.value = forwards, value
+        self.flt = error_filter or is_recoverable
+        self.full_payload = full_payload
+        self.result_type = result_type
+        self.arrow_type = to_arrow_type(result_type)
+        self.truncated = _truncated(result_type)
+        self.pending = []
+        self.call = wrap(self._run) if wrap is not None else self.fn
+
+    def _run(self, *args):
+        if self.pending:
+            raise self.pending.pop()
+        return self.fn(*args)
+
+    def _fail(self, exc: Exception, args: tuple) -> dict:
+        if self.flt(exc):
+            raise exc
+        if self.full_payload:
+            return error_payload(self.value(args), exc)
+        return _drop_payload(exc)
+
+    def _reject(self, exc: ResultTypeError, args: tuple) -> dict:
+        if self.call is not self.fn:
+            self.pending.append(exc)
+            try:
+                self.call(*args)
+            except Exception as replayed:  # noqa: BLE001
+                exc = replayed
+            self.pending.clear()
+        return self._fail(exc, args)
+
+    def _why_not(self, r: Any) -> Optional[str]:
+        if self.truncated is not None and self.truncated(r):
+            return "pyarrow would truncate it"
+        try:
+            pa.array([r], self.arrow_type)
+        except _CONVERT_ERRORS as exc:
+            return str(exc)
+        return None
+
+    def run(self, records: list) -> tuple:
+        """``records`` → ``(take, result array, error array)``; output row
+        ``j`` belongs to record ``take[j]``."""
+        call, fail, forwards = self.call, self._fail, self.forwards
+        take, results, errs = [], [], []
+        for i, args in enumerate(records):
+            try:
+                out = call(*args)
+            except Exception as exc:  # noqa: BLE001 — Throwables pass through untouched
+                take.append(i)
+                results.append(None)
+                errs.append(fail(exc, args))
+                continue
+            for r in (out or ()) if forwards else (out,):
+                take.append(i)
+                results.append(r)
+                errs.append(None)
+        try:
+            if self.truncated is None or not any(map(self.truncated, results)):
+                return take, pa.array(results, self.arrow_type), pa.array(errs, _ERROR_ARROW)
+        except _CONVERT_ERRORS:
+            pass
+        # row by row: a record with a result that does not convert keeps one
+        # row, its error row, in place of its first result
+        failed = {}
+        for i, r, e in zip(take, results, errs):
+            why = None if e is not None or i in failed else self._why_not(r)
+            if why is not None:
+                failed[i] = ResultTypeError(
+                    f"{type(r).__name__} result {reprlib.repr(r)} does not convert "
+                    f"to {self.result_type.simpleString()}: {why}"
+                )
+        rows = []
+        for i, r, e in zip(take, results, errs):
+            exc = failed.get(i)
+            if exc is None:
+                rows.append((i, r, e))
+            elif exc is not True:
+                rows.append((i, None, self._reject(exc, records[i])))
+                failed[i] = True
+        take, results, errs = (list(c) for c in zip(*rows)) if rows else ([], [], [])
+        return take, pa.array(results, self.arrow_type), pa.array(errs, _ERROR_ARROW)
+
+
+def _column_udf(loop: _RecordLoop):
+    @arrow_udf(processed_schema(loop.result_type))
+    def _capture(*cols: pa.Array) -> pa.Array:
+        _, res, err = loop.run(list(zip(*map(_pylist, cols))))
+        return pa.StructArray.from_arrays([res, err], names=[RESULT_COL, ERROR_COL])
+
+    return _capture.asNondeterministic()
 
 
 def capture_udf(
     fn: Callable[..., Any],
     result_type: Union[DataType, str],
     error_filter: Optional[ErrorFilter] = None,
-    n_args: int = 1,
     full_payload: bool = True,
 ):
     """Column-level capture primitive.
 
-    Returns a nondeterministic pandas UDF mapping ``n_args`` input columns to
-    ``struct<result: result_type, error: ERROR_SCHEMA>``.  The rendered
+    Returns a nondeterministic Arrow UDF mapping any number of input columns
+    to ``struct<result: result_type, error: ERROR_SCHEMA>``.  The rendered
     ``input_value`` in the error payload is the *last* argument (the value;
     key-value shapes pass ``(key, value)``), matching the reference where
     ``ProcessingError`` carries the input value (``ProcessingError.java:43-47``).
     """
-    if not callable(fn):
-        # build-time contract: the reference throws NPE from the factory on
-        # null args (ErrorCapturingKeyValueMapperTopologyTest.java:79-91)
-        raise TypeError(f"wrapped function must be callable, got {type(fn).__name__}")
-    flt = error_filter or is_recoverable
-    if isinstance(result_type, str):
-        result_type = DataType.fromDDL(result_type)
-    out_schema = processed_schema(result_type)
-
-    @pandas_udf(out_schema)
-    def _capture(*cols: pd.Series) -> pd.DataFrame:
-        n = len(cols[0])
-        results = [None] * n
-        errs = [None] * n
-        if len(cols) == 1:
-            # specialized single-arg hot loop: no zip/tuple packing, no
-            # per-row normalizer dispatch, fn call inlined in the try
-            norm = _norm_for(cols[0])
-            vals = cols[0].tolist()
-            for i, v in enumerate(vals):
-                if norm is not None:
-                    v = norm(v)
-                try:
-                    results[i] = fn(v)
-                except Exception as exc:  # noqa: BLE001
-                    if flt(exc):
-                        raise
-                    if full_payload:
-                        errs[i] = error_payload(v, exc)
-                    else:
-                        errs[i] = _drop_payload(exc)
-        else:
-            norms = [_norm_for(c) for c in cols]
-            rows = zip(*[c.tolist() for c in cols])
-            for i, raw in enumerate(rows):
-                args = tuple(
-                    a if nm is None else nm(a) for a, nm in zip(raw, norms)
-                )
-                results[i], errs[i] = _run_one(fn, args, args[-1], flt, full_payload)
-        return pd.DataFrame({RESULT_COL: results, ERROR_COL: errs})
-
-    return _capture.asNondeterministic()
+    return _column_udf(_RecordLoop(fn, result_type, error_filter, full_payload))
 
 
 def _apply_capture(
@@ -204,8 +300,9 @@ def _apply_capture(
     error_filter: Optional[ErrorFilter],
     processed_col: str,
     full_payload: bool = True,
+    wrap: Optional[Callable[[Callable], Callable]] = None,
 ) -> DataFrame:
-    udf = capture_udf(fn, result_type, error_filter, n_args=len(in_cols), full_payload=full_payload)
+    udf = _column_udf(_RecordLoop(fn, result_type, error_filter, full_payload, wrap))
     cols = [F.col(c) if isinstance(c, str) else c for c in in_cols]
     return df.withColumn(processed_col, udf(*cols))
 
@@ -215,6 +312,17 @@ def kv_struct_type(key_type: DataType, value_type: DataType) -> StructType:
     return StructType(
         [StructField("key", key_type, True), StructField("value", value_type, True)]
     )
+
+
+def _as_list(fn: Callable[..., Any]) -> Callable[..., Any]:
+    """``fn(...) -> iterable`` as an array result (None stays None).  A
+    ``(key, value)`` pair converts to a ``struct<key, value>`` as it is."""
+
+    def _flat(*args):
+        out = fn(*args)
+        return None if out is None else list(out)
+
+    return _flat
 
 
 # ---------------------------------------------------------------------------
@@ -279,17 +387,9 @@ def capture_map(
     key survives as the original ``key_col`` column ("new key is only
     relevant if no error occurs", ``ErrorCapturingKeyValueMapper.java:103-105``).
     """
-
-    def _kv(k, v):
-        out = fn(k, v)
-        if out is None:
-            return None
-        nk, nv = out
-        return {"key": nk, "value": nv}
-
     return _apply_capture(
         df,
-        _kv,
+        fn,
         kv_struct_type(key_type, value_type),
         [key_col, value_col],
         error_filter,
@@ -313,13 +413,8 @@ def capture_flat_map_values(
     :func:`values` explodes it (``explode_outer`` never drops error rows
     because they are filtered to the other branch first).
     """
-
-    def _flat(v):
-        out = fn(v)
-        return None if out is None else list(out)
-
     return _apply_capture(
-        df, _flat, ArrayType(element_type), [value_col], error_filter, processed_col,
+        df, _as_list(fn), ArrayType(element_type), [value_col], error_filter, processed_col,
         full_payload,
     )
 
@@ -335,14 +430,9 @@ def capture_flat_map_values_with_key(
     full_payload: bool = True,
 ) -> DataFrame:
     """``ErrorCapturingFlatValueMapperWithKey`` (``...WithKey.java:62,92-101``)."""
-
-    def _flat(k, v):
-        out = fn(k, v)
-        return None if out is None else list(out)
-
     return _apply_capture(
         df,
-        _flat,
+        _as_list(fn),
         ArrayType(element_type),
         [key_col, value_col],
         error_filter,
@@ -367,16 +457,9 @@ def capture_flat_map(
     ``fn(key, value) -> iterable[(new_key, new_value)]``; result column is
     ``array<struct<key, value>>``.
     """
-
-    def _flat(k, v):
-        out = fn(k, v)
-        if out is None:
-            return None
-        return [{"key": nk, "value": nv} for nk, nv in out]
-
     return _apply_capture(
         df,
-        _flat,
+        _as_list(fn),
         ArrayType(kv_struct_type(key_type, value_type)),
         [key_col, value_col],
         error_filter,
@@ -428,36 +511,27 @@ def errors(df: DataFrame, processed_col: str = "r") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Processor shapes — arbitrary 0..n forwards per record via mapInPandas
+# Processor shapes — arbitrary 0..n forwards per record via mapInArrow
 # (reference ``ErrorCapturingProcessor.java:164-176``,
 #  ``ErrorCapturingValueProcessor.java:159-168``)
 # ---------------------------------------------------------------------------
 
 
-def capture_process(
+def _process(
     df: DataFrame,
-    processor: Callable[[dict], Optional[Iterable[dict]]],
-    result_type: StructType,
-    error_filter: Optional[ErrorFilter] = None,
+    processor: Callable[[dict], Optional[Iterable[Any]]],
+    result_type: DataType,
+    error_filter: Optional[ErrorFilter],
     pass_through: Optional[Sequence[str]] = None,
     input_value_col: Optional[str] = None,
+    full_payload: bool = True,
+    wrap: Optional[Callable[[Callable], Callable]] = None,
 ) -> DataFrame:
-    """``ErrorCapturingProcessor.captureErrors`` — the general ``process`` shape.
-
-    ``processor(row_dict)`` may forward 0..n result dicts (the Spark analog
-    of ``context.forward`` — ``ErrorCapturingApiProcessorContext.java:31-59``:
-    every forward is re-wrapped as a success).  Output schema:
-    ``pass_through`` columns (default: all input columns) + ``result``
-    (nullable ``result_type``) + ``error``.  Success rows: one per forward,
-    error NULL.  Error rows: one, result NULL.
-
-    Implemented with ``mapInPandas`` so multi-forward and per-row capture
-    stay inside one Arrow-batched pass — no driver involvement, scales with
-    partitions.
-    """
-    flt = error_filter or is_recoverable
+    """:func:`capture_process`, with ``wrap`` (the log or describe layer)
+    around ``processor``."""
     keep = list(pass_through) if pass_through is not None else list(df.columns)
-    ival = input_value_col or (df.columns[-1])
+    ival = input_value_col or df.columns[-1]
+    out_names = keep + [RESULT_COL, ERROR_COL]
     out_schema = StructType(
         [df.schema[c] for c in keep]
         + [
@@ -465,35 +539,23 @@ def capture_process(
             StructField(ERROR_COL, ERROR_SCHEMA, True),
         ]
     )
+    loop = _RecordLoop(
+        processor, result_type, error_filter, full_payload, wrap,
+        forwards=True, value=lambda args: args[0].get(ival),
+    )
 
     def _map(batches):
-        for pdf in batches:
-            out_rows = []
-            records = pdf.to_dict("records")
-            for rec in records:
-                rec = {k: _norm(v) for k, v in rec.items()}
-                base = {k: rec.get(k) for k in keep}
-                try:
-                    forwards = processor(dict(rec))
-                except Exception as exc:  # noqa: BLE001
-                    if flt(exc):
-                        raise
-                    row = dict(base)
-                    row[RESULT_COL] = None
-                    row[ERROR_COL] = error_payload(rec.get(ival), exc)
-                    out_rows.append(row)
-                    continue
-                for fwd in forwards or ():
-                    row = dict(base)
-                    row[RESULT_COL] = fwd
-                    row[ERROR_COL] = None
-                    out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=keep + [RESULT_COL, ERROR_COL])
+        for batch in batches:
+            names = batch.schema.names
+            recs = [(dict(zip(names, row)),) for row in zip(*map(_pylist, batch.columns))]
+            take, res, err = loop.run(recs)
+            passed = batch.select(keep).take(pa.array(take, pa.int64()))
+            yield pa.RecordBatch.from_arrays(passed.columns + [res, err], names=out_names)
 
-    return df.mapInPandas(_map, out_schema)
+    return df.mapInArrow(_map, out_schema)
 
 
-def capture_process_values(
+def capture_process(
     df: DataFrame,
     processor: Callable[[dict], Optional[Iterable[Any]]],
     result_type: DataType,
@@ -501,25 +563,23 @@ def capture_process_values(
     pass_through: Optional[Sequence[str]] = None,
     input_value_col: Optional[str] = None,
 ) -> DataFrame:
-    """``ErrorCapturingValueProcessor`` — fixed-key ``processValues`` shape
-    (``ErrorCapturingValueProcessor.java:68,159-168``): forwards carry only a
-    new value; key columns pass through unchanged.
+    """``ErrorCapturingProcessor.captureErrors`` — the general ``process`` shape.
+
+    ``processor(row_dict)`` may forward 0..n results (the Spark analog of
+    ``context.forward`` — ``ErrorCapturingApiProcessorContext.java:31-59``:
+    every forward is re-wrapped as a success).  Output schema:
+    ``pass_through`` columns (default: all input columns) + ``result``
+    (nullable ``result_type``) + ``error``.  Success rows: one per forward,
+    error NULL.  Error rows: one, result NULL.
+
+    Implemented with ``mapInArrow`` so multi-forward and per-row capture
+    stay inside one Arrow-batched pass — no driver involvement, scales with
+    partitions.
     """
-    wrapped_type = result_type
-    needs_wrap = not isinstance(result_type, StructType)
-    if needs_wrap:
-        wrapped_type = StructType([StructField("value", result_type, True)])
+    return _process(df, processor, result_type, error_filter, pass_through, input_value_col)
 
-        def _proc(rec):
-            out = processor(rec)
-            return None if out is None else [{"value": v} for v in out]
 
-    else:
-        _proc = processor
-
-    out = capture_process(
-        df, _proc, wrapped_type, error_filter, pass_through, input_value_col
-    )
-    if needs_wrap:
-        out = out.withColumn(RESULT_COL, F.col(RESULT_COL)["value"])
-    return out
+#: ``ErrorCapturingValueProcessor`` — fixed-key ``processValues`` shape
+#: (``ErrorCapturingValueProcessor.java:68,159-168``): forwards carry only a
+#: new value of any ``result_type``; key columns pass through unchanged.
+capture_process_values = capture_process

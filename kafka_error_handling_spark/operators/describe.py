@@ -17,20 +17,26 @@ straight through), so the same three shapes also serve the flat variants —
 exactly as in the reference, where the flat tests reuse
 ``ErrorDescribingKeyValueMapper.describeErrors`` with ``flatMap``
 (``ErrorDescribingFlatKeyValueMapperTopologyTest.java:68``).
+
+Architecture notes: this module has no record loop of its own.  Every
+``describe_*`` transform is the capture loop of
+:mod:`~kafka_error_handling_spark.operators.capture` (an ``arrow_udf`` for
+column shapes, ``mapInArrow`` for processors; no pandas) with the describe
+wrapper around the function and an error filter that rethrows everything,
+projected to its ``result`` column.  A result that does not convert to the
+declared type therefore also fails naming the record.
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable, Iterable, Optional, Sequence
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DataType, StructType
 
 from ..model import ProcessingException
+from . import capture as C
 
 __all__ = [
     "describe_flat_map_values",
@@ -43,6 +49,11 @@ __all__ = [
     "describe_map",
     "describe_process",
 ]
+
+
+def _rethrow(exc: BaseException) -> bool:
+    """Error filter of the describe family: every failure is rethrown."""
+    return True
 
 
 def describe_errors(fn: Callable[..., Any]) -> Callable[..., Any]:
@@ -75,48 +86,37 @@ def describe_udf(
     fn: Callable[..., Any],
     result_type: DataType,
     with_key: bool = False,
-):
-    """Pandas-UDF wrapper re-raising enriched — the column-level primitive.
+) -> Callable[..., Column]:
+    """The column-level primitive: ``describe_udf(fn, t)(*cols)`` is a
+    column of type ``t``.
 
-    Per-row loop inside an Arrow batch; the first failing record aborts the
-    task with a ``ProcessingException`` naming it (fail-fast is the point).
-
-    Struct ``result_type`` (the ``ErrorDescribingKeyValueMapper`` parity
-    shape, where results are ``struct<key, value>``) returns a
-    ``pd.DataFrame`` keyed by field name — pandas UDFs require a DataFrame,
-    not a Series, for struct returns (mirrors ``capture_udf``).
+    The capture record loop with :func:`describe_errors` (or
+    :func:`describe_errors_with_key`) around ``fn`` and an always-rethrow
+    error filter: the first failing record aborts the task with a
+    ``ProcessingException`` naming it (fail-fast is the point).  A result
+    that does not convert to ``result_type`` fails the same way.
     """
-    wrapped = describe_errors_with_key(fn) if with_key else describe_errors(fn)
+    wrap = describe_errors_with_key if with_key else describe_errors
+    udf = C._column_udf(C._RecordLoop(fn, result_type, _rethrow, wrap=wrap))
+    return lambda *cols: udf(*cols)[C.RESULT_COL]
 
+
+def _describe(
+    df: DataFrame,
+    fn: Callable[..., Any],
+    result_type: DataType,
+    cols: Sequence[str],
+    result_col: str,
+    with_key: bool,
+) -> DataFrame:
+    out = df.withColumn(result_col, describe_udf(fn, result_type, with_key)(*map(F.col, cols)))
     if isinstance(result_type, StructType):
-        fields = [f.name for f in result_type.fields]
-
-        @pandas_udf(result_type)
-        def _describe_struct(*cols: pd.Series) -> pd.DataFrame:
-            rows = zip(*[c.tolist() for c in cols])
-            out = [wrapped(*row) for row in rows]
-            recs = [
-                None
-                if r is None
-                else (r if isinstance(r, dict) else dict(zip(fields, r)))
-                for r in out
-            ]
-            return pd.DataFrame(
-                [
-                    {f: None for f in fields} if r is None else r
-                    for r in recs
-                ],
-                columns=fields,
-            )
-
-        return _describe_struct.asNondeterministic()
-
-    @pandas_udf(result_type)
-    def _describe(*cols: pd.Series) -> pd.Series:
-        rows = zip(*[c.tolist() for c in cols])
-        return pd.Series([wrapped(*row) for row in rows])
-
-    return _describe.asNondeterministic()
+        # a None result reads as a struct of NULL fields, not a NULL struct
+        r = F.col(result_col)
+        out = out.withColumn(
+            result_col, F.struct(*[r[f.name].alias(f.name) for f in result_type.fields])
+        )
+    return out
 
 
 def describe_map_values(
@@ -128,8 +128,7 @@ def describe_map_values(
 ) -> DataFrame:
     """``describeErrors`` over the ``mapValues`` shape (also serves
     ``flatMapValues`` with an array ``result_type`` — type-transparent)."""
-    udf = describe_udf(fn, result_type, with_key=False)
-    return df.withColumn(result_col, udf(F.col(value_col)))
+    return _describe(df, fn, result_type, [value_col], result_col, with_key=False)
 
 
 def describe_map_values_with_key(
@@ -140,70 +139,50 @@ def describe_map_values_with_key(
     value_col: str = "value",
     result_col: str = "result",
 ) -> DataFrame:
-    """``ErrorDescribingValueMapperWithKey`` (``ErrorDescribingValueMapperWithKey.java:58,64-70``)."""
-    udf = describe_udf(fn, result_type, with_key=True)
-    return df.withColumn(result_col, udf(F.col(key_col), F.col(value_col)))
-
-
-def describe_map(
-    df: DataFrame,
-    fn: Callable[[Any, Any], Any],
-    result_type: DataType,
-    key_col: str = "key",
-    value_col: str = "value",
-    result_col: str = "result",
-) -> DataFrame:
-    """``ErrorDescribingKeyValueMapper`` over ``map``/``flatMap``
+    """``ErrorDescribingValueMapperWithKey`` (``ErrorDescribingValueMapperWithKey.java:58,64-70``)
+    and ``ErrorDescribingKeyValueMapper`` over ``map``/``flatMap``
     (``ErrorDescribingKeyValueMapper.java:59``): ``fn(key, value)`` with the
     key-value message; return type passes through (tuple-shaped results use a
     ``struct<key, value>`` ``result_type``)."""
-    udf = describe_udf(fn, result_type, with_key=True)
-    return df.withColumn(result_col, udf(F.col(key_col), F.col(value_col)))
+    return _describe(df, fn, result_type, [key_col, value_col], result_col, with_key=True)
+
+
+#: ``ErrorDescribingKeyValueMapper`` — the same transform: describe does not
+#: interpret the result, so a key change is just a ``struct<key, value>`` result
+describe_map = describe_map_values_with_key
 
 
 def describe_process(
     df: DataFrame,
     processor: Callable[[dict], Optional[Iterable[dict]]],
-    result_type: StructType,
+    result_type: DataType,
     pass_through: Optional[Sequence[str]] = None,
     key_cols: Optional[Sequence[str]] = None,
     value_col: Optional[str] = None,
 ) -> DataFrame:
     """``ErrorDescribingProcessor`` / ``ErrorDescribingValueProcessor``
-    (``ErrorDescribingProcessor.java:64,101-107``): mapInPandas wrapper
-    re-raising enriched; multi-forward supported like
+    (``ErrorDescribingProcessor.java:64,101-107``): the capture processor
+    loop re-raising enriched; multi-forward supported like
     :func:`~kafka_error_handling_spark.operators.capture.capture_process`.
     """
-    keep = list(pass_through) if pass_through is not None else list(df.columns)
     vcol = value_col or df.columns[-1]
     kcols = list(key_cols) if key_cols else []
-    from pyspark.sql.types import StructField
 
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + [StructField("result", result_type, True)]
-    )
+    def _wrap(proc):
+        def _described(rec):
+            try:
+                return proc(rec)
+            except Exception as exc:  # noqa: BLE001
+                if kcols:
+                    key = tuple(rec.get(k) for k in kcols)
+                    key = key[0] if len(key) == 1 else key
+                    raise ProcessingException.for_key_value(key, rec.get(vcol), exc) from exc
+                raise ProcessingException.for_value(rec.get(vcol), exc) from exc
 
-    def _map(batches):
-        for pdf in batches:
-            out_rows = []
-            for rec in pdf.to_dict("records"):
-                try:
-                    forwards = processor(dict(rec))
-                except Exception as exc:  # noqa: BLE001
-                    if kcols:
-                        key = tuple(rec.get(k) for k in kcols)
-                        key = key[0] if len(key) == 1 else key
-                        raise ProcessingException.for_key_value(
-                            key, rec.get(vcol), exc
-                        ) from exc
-                    raise ProcessingException.for_value(rec.get(vcol), exc) from exc
-                for fwd in forwards or ():
-                    row = {k: rec.get(k) for k in keep}
-                    row["result"] = fwd
-                    out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=keep + ["result"])
+        return _described
 
-    return df.mapInPandas(_map, out_schema)
+    out = C._process(df, processor, result_type, _rethrow, pass_through, vcol, wrap=_wrap)
+    return out.drop(C.ERROR_COL)
 
 
 # Type-transparent flat aliases — the reference reuses the same describing

@@ -34,7 +34,7 @@ from typing import Any, Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import ArrayType, DataType
 
 from ..model import ErrorFilter, _render_for_message, is_recoverable
 from . import capture as C
@@ -63,14 +63,21 @@ def log_errors(
     fn: Callable[..., Any],
     error_filter: Optional[ErrorFilter] = None,
     with_key: bool = False,
+    max_logs: Optional[int] = None,
 ):
-    """Wrap a plain callable with reference log-and-signal semantics.
+    """Wrap a plain callable with the reference's log-and-signal semantics:
+    a non-recoverable exception is logged as ``Cannot process …`` and
+    re-raised, a recoverable one is re-raised unlogged.  Every ``log_*``
+    transform runs its records through this wrapper and drops what it
+    re-raises.
 
-    Returns a callable that re-raises recoverable errors and raises a
-    sentinel-captured path otherwise; used internally by the ``log_*``
-    DataFrame transforms (which capture, log, and filter).
+    ``max_logs`` caps the log lines per wrapper, followed by one suppression
+    notice; None logs every failure.  In a transform the wrapper is pickled
+    with the UDF, so the cap is per Python worker — a bounded number of
+    processes, hence a bounded log volume at any SF.
     """
     flt = error_filter or is_recoverable
+    failures = [0]
 
     def _wrapped(*args):
         try:
@@ -78,7 +85,16 @@ def log_errors(
         except Exception as exc:  # noqa: BLE001
             if flt(exc):
                 raise
-            if with_key and len(args) >= 2:
+            failures[0] += 1
+            if max_logs is not None and failures[0] > max_logs:
+                if failures[0] == max_logs + 1:
+                    logger.error(
+                        "Suppressing further 'Cannot process' logs in this worker "
+                        "(max_logs=%d reached); dropped-record totals remain "
+                        "available via the observe metric",
+                        max_logs,
+                    )
+            elif with_key and len(args) >= 2:
                 # message contract: ``ErrorLoggingKeyValueMapper.java:100``
                 logger.error(
                     "Cannot process ('%s', '%s')",
@@ -99,57 +115,16 @@ def log_errors(
 DEFAULT_MAX_LOGS = 50
 
 
-def _should_log(state: dict, max_logs: Optional[int]) -> bool:
-    """Per-worker rate limiter: True for the first ``max_logs`` failures;
-    emits one suppression notice on the first skipped log.  The closure
-    state lives in the pickled UDF, so the counter is per Python worker —
-    a bounded number of processes, hence a bounded log volume at any SF."""
-    state["n"] += 1
-    if max_logs is None or state["n"] <= max_logs:
-        return True
-    if state["n"] == max_logs + 1:
-        logger.error(
-            "Suppressing further 'Cannot process' logs in this worker "
-            "(max_logs=%d reached); dropped-record totals remain available "
-            "via the observe metric",
-            max_logs,
-        )
-    return False
-
-
-def _logging_fn(
-    fn, with_key: bool, flt: ErrorFilter, max_logs: Optional[int] = DEFAULT_MAX_LOGS
-):
-    """Capture-flavored fn that logs before letting capture swallow the row."""
-    state = {"n": 0}
-
-    def _inner(*args):
-        try:
-            return fn(*args)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                if with_key and len(args) >= 2:
-                    logger.error(
-                        "Cannot process ('%s', '%s')",
-                        _render_for_message(args[0]),
-                        _render_for_message(args[-1]),
-                        exc_info=exc,
-                    )
-                else:
-                    logger.error(
-                        "Cannot process %s", _render_for_message(args[-1]), exc_info=exc
-                    )
-            raise
-
-    return _inner
-
-
-def _drop_errors(processed: DataFrame, processed_col: str, observe: bool) -> DataFrame:
+def _log_columns(df, fn, result_type, in_cols, error_filter, observe, max_logs) -> DataFrame:
+    """Capture with :func:`log_errors` around ``fn``, then drop the errors."""
+    flt = error_filter or is_recoverable
+    p = C._apply_capture(
+        df, fn, result_type, in_cols, flt, "r", full_payload=False,
+        wrap=lambda f: log_errors(f, flt, with_key=len(in_cols) > 1, max_logs=max_logs),
+    )
     if observe:
-        processed = _observe_drops(
-            processed, F.col(processed_col)[C.ERROR_COL].isNotNull()
-        )
-    return C.values(processed, processed_col)
+        p = _observe_drops(p, F.col("r")[C.ERROR_COL].isNotNull())
+    return C.values(p, "r")
 
 
 def _observe_drops(df: DataFrame, is_error: Column) -> DataFrame:
@@ -174,11 +149,7 @@ def log_map_values(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingValueMapper.logErrors`` (``ErrorLoggingValueMapper.java:62,89-100``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map_values(
-        df, _logging_fn(fn, False, flt, max_logs), result_type, value_col, flt, full_payload=False
-    )
-    return _drop_errors(p, "r", observe)
+    return _log_columns(df, fn, result_type, [value_col], error_filter, observe, max_logs)
 
 
 def log_map_values_with_key(
@@ -192,12 +163,9 @@ def log_map_values_with_key(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingValueMapperWithKey`` (``ErrorLoggingValueMapperWithKey.java:64,92-103``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map_values_with_key(
-        df, _logging_fn(fn, True, flt, max_logs), result_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_columns(
+        df, fn, result_type, [key_col, value_col], error_filter, observe, max_logs
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_map(
@@ -212,12 +180,10 @@ def log_map(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingKeyValueMapper`` (``ErrorLoggingKeyValueMapper.java:64,92-103``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_map(
-        df, _logging_fn(fn, True, flt, max_logs), key_type, value_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_columns(
+        df, fn, C.kv_struct_type(key_type, value_type), [key_col, value_col],
+        error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map_values(
@@ -230,12 +196,10 @@ def log_flat_map_values(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatValueMapper`` (``ErrorLoggingFlatValueMapper.java:61,88-98``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map_values(
-        df, _logging_fn(fn, False, flt, max_logs), element_type, value_col, flt,
-        full_payload=False,
+    return _log_columns(
+        df, C._as_list(fn), ArrayType(element_type), [value_col], error_filter, observe,
+        max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map_values_with_key(
@@ -249,12 +213,10 @@ def log_flat_map_values_with_key(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatValueMapperWithKey`` (``...WithKey.java:63,91-101``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map_values_with_key(
-        df, _logging_fn(fn, True, flt, max_logs), element_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_columns(
+        df, C._as_list(fn), ArrayType(element_type), [key_col, value_col], error_filter,
+        observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_flat_map(
@@ -269,12 +231,10 @@ def log_flat_map(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingFlatKeyValueMapper`` (``ErrorLoggingFlatKeyValueMapper.java:63,91-101``)."""
-    flt = error_filter or is_recoverable
-    p = C.capture_flat_map(
-        df, _logging_fn(fn, True, flt, max_logs), key_type, value_type, key_col, value_col, flt,
-        full_payload=False,
+    return _log_columns(
+        df, C._as_list(fn), ArrayType(C.kv_struct_type(key_type, value_type)),
+        [key_col, value_col], error_filter, observe, max_logs,
     )
-    return _drop_errors(p, "r", observe)
 
 
 def log_process(
@@ -287,56 +247,26 @@ def log_process(
     max_logs: Optional[int] = DEFAULT_MAX_LOGS,
 ) -> DataFrame:
     """``ErrorLoggingProcessor`` (``ErrorLoggingProcessor.java:68,157-167``):
-    mapInPandas wrapper, exception → log + skip row.  Also covers the legacy
-    ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
+    the capture processor loop with :func:`log_errors` around the processor,
+    exception → log + skip row.  Also covers ``ErrorLoggingValueProcessor``
+    and the legacy ``ErrorLoggingFlatValueTransformer(WithKey)`` shapes
     (``ErrorLoggingFlatValueTransformer.java:65,148-158``) — same semantics,
-    legacy API surface.
+    any ``result_type``.
     """
     flt = error_filter or is_recoverable
-    state = {"n": 0}
-
-    def _proc(rec):
-        try:
-            return processor(rec)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                logger.error("Cannot process %s", rec, exc_info=exc)
-            raise
-
-    p = C.capture_process(df, _proc, result_type, flt, pass_through, input_value_col)
-    # processor shapes emit a top-level error column, so the drop metric is
-    # the flat-column variant of _drop_errors (ADVICE r1: drops must stay
-    # counted once per-worker max_logs suppression kicks in)
-    p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
-    return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
-
-
-def log_process_values(
-    df: DataFrame,
-    processor,
-    result_type,
-    error_filter: Optional[ErrorFilter] = None,
-    pass_through=None,
-    input_value_col=None,
-    max_logs: Optional[int] = DEFAULT_MAX_LOGS,
-) -> DataFrame:
-    """``ErrorLoggingValueProcessor`` (``ErrorLoggingValueProcessor.java:66,152-162``)."""
-    flt = error_filter or is_recoverable
-    state = {"n": 0}
-
-    def _proc(rec):
-        try:
-            return processor(rec)
-        except Exception as exc:  # noqa: BLE001
-            if not flt(exc) and _should_log(state, max_logs):
-                logger.error("Cannot process %s", rec, exc_info=exc)
-            raise
-
-    p = C.capture_process_values(
-        df, _proc, result_type, flt, pass_through, input_value_col
+    p = C._process(
+        df, processor, result_type, flt, pass_through, input_value_col,
+        full_payload=False, wrap=lambda f: log_errors(f, flt, False, max_logs),
     )
+    # processor shapes emit a top-level error column, so the drop metric is
+    # the flat-column variant of the one in _log_columns (ADVICE r1: drops
+    # must stay counted once per-worker max_logs suppression kicks in)
     p = _observe_drops(p, F.col(C.ERROR_COL).isNotNull())
     return p.filter(F.col(C.ERROR_COL).isNull()).drop(C.ERROR_COL)
+
+
+#: ``ErrorLoggingValueProcessor`` (``ErrorLoggingValueProcessor.java:66,152-162``)
+log_process_values = log_process
 
 
 # ---------------------------------------------------------------------------

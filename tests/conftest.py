@@ -29,3 +29,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Arrow batches of 7 records for the test's duration (the registry's
+    ``arrowbatch`` sweep perturbation), so per-batch record-loop state —
+    pass-through ``take`` indices, the row-by-row result fallback — is
+    exercised across batch boundaries.  Restores the previous setting."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)

@@ -111,3 +111,18 @@ def test_bench_round_files_sort_by_integer_round(tmp_path):
     )
     assert by_round[0] == "BENCH_r100.json"
     assert sorted(names, reverse=True)[0] != "BENCH_r100.json"  # the old bug
+
+
+def test_registry_import_failure_is_loud(monkeypatch):
+    """A registry module that fails to import fails ``queries()`` instead of
+    silently dropping its queries from the registry and the bench basket."""
+    import pytest
+
+    import kafka_error_handling_spark.plans as plans_pkg
+    from kafka_error_handling_spark.plans import registry
+
+    monkeypatch.delattr(plans_pkg, "graph", raising=False)
+    # a None entry makes ``from . import graph`` raise ImportError
+    monkeypatch.setitem(sys.modules, "kafka_error_handling_spark.plans.graph", None)
+    with pytest.raises(ImportError):
+        registry.queries()

@@ -178,6 +178,25 @@ def test_capture_process_values_scalar_result(spark):
     assert all(r.key == 1 for r in ok)  # fixed key passes through
 
 
+def test_capture_process_generator_failing_midway_is_error_row(spark):
+    """A processor written as a generator raises while its forwards are
+    drained, not when it is called: that is still a failure of its record
+    (one error row, none of its forwards), not of the task."""
+    df = kv_df(spark, [(1, "ab"), (2, "az")])
+
+    def proc(rec):
+        for c in rec["value"]:
+            if c == "z":
+                raise ValueError("bad z")
+            yield c.upper()
+
+    rows = keh.capture_process_values(df, proc, StringType()).collect()
+    assert sorted((r.key, r.result) for r in rows if r.error is None) == [(1, "A"), (1, "B")]
+    assert [(r.key, r.error.error_class) for r in rows if r.error is not None] == [
+        (2, "ValueError")
+    ]
+
+
 def test_dead_letters_projection(spark):
     df = kv_df(spark, [(1, "good"), (2, "bad")])
 

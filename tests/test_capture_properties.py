@@ -60,9 +60,7 @@ def _expected(rows):
     return ok, bad
 
 
-@given(_rows)
-@_SETTINGS
-def test_exactly_one_branch_and_key_preserved(spark, rows):
+def _check_exactly_one_branch(spark, rows):
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)],
         "idx int, key int, value double",
@@ -84,6 +82,22 @@ def test_exactly_one_branch_and_key_preserved(spark, rows):
         else:
             assert r.idx in exp_bad
             assert r.err.error_class in ("ValueError", "RuntimeError")
+
+
+@given(_rows)
+@_SETTINGS
+def test_exactly_one_branch_and_key_preserved(spark, rows):
+    _check_exactly_one_branch(spark, rows)
+
+
+@given(_rows)
+@_SETTINGS
+def test_exactly_one_branch_and_key_preserved_small_batches(
+    spark, small_arrow_batches, rows
+):
+    """Same property with 7-record Arrow batches: up to 30 rows span several
+    batches, so the record loop's per-batch state must stay batch-local."""
+    _check_exactly_one_branch(spark, rows)
 
 
 @given(_rows)

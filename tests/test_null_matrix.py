@@ -90,3 +90,60 @@ def test_struct_input_rendered_as_json_in_dlq(spark):
     )
     e = keh.errors(p).collect()[0]
     assert e.error.input_value == '{"a":7}'
+
+
+# --- one input contract for every family ----------------------------------
+# SQL NULL reaches the wrapped function as None at every type, and a real
+# NaN double reaches it as NaN (Java ``Double.NaN`` is a value, not null) —
+# the same for capture, log and describe, column and processor shapes.
+
+def _seen(v):
+    if v is None:
+        return "None"
+    if isinstance(v, float) and v != v:
+        return "nan"
+    return type(v).__name__
+
+
+def _contract_df(spark):
+    return spark.sql(
+        "SELECT 0 AS id, CAST(NULL AS INT) AS i, CAST(NULL AS DOUBLE) AS d, "
+        "CAST(NULL AS TIMESTAMP) AS ts, CAST(NULL AS ARRAY<INT>) AS a "
+        "UNION ALL SELECT 1, 5, CAST('NaN' AS DOUBLE), "
+        "TIMESTAMP'2024-01-01 00:00:00', ARRAY(1, 2)"
+    )
+
+
+_SEEN_AT_ID1 = {"i": "int", "d": "nan", "ts": "datetime", "a": "list"}
+
+
+@pytest.mark.parametrize("col", ["i", "d", "ts"])
+@pytest.mark.parametrize("family", ["capture", "log", "describe"])
+def test_column_shapes_see_null_as_none_and_nan_as_nan(spark, family, col):
+    df = _contract_df(spark)
+    if family == "capture":
+        out = keh.values(keh.capture_map_values(df, _seen, StringType(), value_col=col))
+    elif family == "log":
+        out = keh.log_map_values(df, _seen, StringType(), value_col=col, observe=False)
+    else:
+        out = keh.describe_map_values(df, _seen, StringType(), value_col=col)
+    got = {r.id: r.result for r in out.collect()}
+    assert got == {0: "None", 1: _SEEN_AT_ID1[col]}
+
+
+@pytest.mark.parametrize("family", ["capture", "log", "describe"])
+def test_processor_shapes_see_null_as_none_and_nan_as_nan(spark, family):
+    df = _contract_df(spark)
+    cols = list(_SEEN_AT_ID1)
+
+    def proc(rec):
+        return [",".join(_seen(rec[c]) for c in cols)]
+
+    if family == "capture":
+        out = keh.capture_process_values(df, proc, StringType())
+    elif family == "log":
+        out = keh.log_process_values(df, proc, StringType())
+    else:
+        out = keh.describe_process(df, proc, StringType())
+    got = {r.id: r.result for r in out.collect()}
+    assert got == {0: ",".join(["None"] * len(cols)), 1: ",".join(_SEEN_AT_ID1.values())}

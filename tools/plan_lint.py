@@ -9,7 +9,8 @@ are absent:
     scalar/tiny frame (every crossJoin site in the tree is one).
   * ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan.  All
     Python execution here must ride Arrow batches (``ArrowEvalPython``,
-    ``MapInPandas``, ``FlatMapGroupsInPandas*``) or stay JVM-side.
+    ``MapInArrow``, ``MapInPandas``, ``FlatMapGroupsInPandas*``) or stay
+    JVM-side.
 
 Each query is planned TWICE (ADVICE r6 medium): once under the default
 ``autoBroadcastJoinThreshold`` — the stats/drift sweep, comparable with
@@ -55,6 +56,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RED_NODES = ("CartesianProduct", "BatchEvalPython")
 ARROW_NODES = (
     "ArrowEvalPython",
+    "MapInArrow",
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
