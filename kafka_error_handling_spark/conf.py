@@ -17,8 +17,9 @@ SCALE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow transfer for every pandas UDF in the capture layer; batch size
-    # bounds Python-worker memory per batch (rows, not bytes).
+    # Arrow for toPandas/createDataFrame; the capture layer's Arrow UDFs,
+    # mapInArrow and applyInPandasWithState always transfer Arrow batches,
+    # whose size bounds Python-worker memory per batch (rows, not bytes).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Scan parallelism: 128 MiB splits keep per-task memory flat however

@@ -2,42 +2,33 @@
 reference's generated ``DeadLetter`` class
 (``error-handling-avro/src/main/avro/DeadLetter.avsc``).
 
-Two encode paths, dispatched at runtime (``to_avro_dead_letter``):
-
-1. **JVM** — ``pyspark.sql.avro.functions.to_avro(struct, DEAD_LETTER_AVSC)``
-   whenever the spark-avro module is actually loaded (probed once per
-   session with an eager analysis; the import alone succeeds even without
-   the jar).  Fully JVM-side, matching the reference's
-   ``AvroDeadLetterConverter.java:34-49`` cost profile — no Python in the
-   encode hot path on DLQ-heavy runs.
-2. **Spec fallback** — spark-avro is not bundled in this container, so the
-   fallback is a minimal, self-contained implementation of the *public*
-   Avro binary encoding spec (zig-zag varint longs, length-prefixed UTF-8
-   strings, union branch indices) specialized to the DeadLetter schema —
-   ~60 lines, deterministic, round-trip tested by our own decoder, running
-   as an Arrow-batched pandas UDF.
-
-Both paths write the same bytes: Avro binary encoding is fully determined
-by (schema, value) — no framing, no field tags — and the JVM path receives
-the struct re-projected into exact .avsc field order.  Field order:
+``to_avro_dead_letter`` uses the JVM ``to_avro(struct, DEAD_LETTER_AVSC)``
+whenever the spark-avro module is loaded (probed once per session: the
+import alone succeeds without the jar), with no Python in the hot path, the
+reference's ``AvroDeadLetterConverter.java:34-49`` cost profile.  Without
+the jar it runs the public Avro binary spec (zig-zag varint longs,
+length-prefixed UTF-8, union branch indices): :func:`avro_flat_codec` over
+the DeadLetter record flattened (``cause`` is a non-null record, so Avro
+writes its fields inline) on the Arrow record path
+(:func:`.wire.struct_encoder`).  Both write the same bytes: Avro binary is
+fully determined by (schema, value), and the JVM path gets the struct
+re-projected into .avsc field order:
 
     input_value?, topic?, partition?, offset?, description,
     cause{error_class?, message?, stack_trace?}, input_timestamp?(millis)
 
-Runs as an Arrow-batched pandas UDF over the dead-letter struct column —
-encoding is per-row by nature; Arrow keeps the transfer vectorized.
+``input_timestamp`` is the instant, whatever the session time zone; a NULL
+dead letter encodes to NULL.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Optional
-
-import pandas as pd
+from typing import Optional
 
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+
+from .wire import flat_record, from_epoch_micros, read_varint, struct_encoder, varint
 
 __all__ = [
     "DEAD_LETTER_AVSC",
@@ -84,16 +75,7 @@ DEAD_LETTER_AVSC = json.dumps(
 
 def _zigzag(n: int) -> bytes:
     """Avro long: zig-zag + base-128 varint (public Avro spec)."""
-    z = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return varint((n << 1) ^ (n >> 63))
 
 
 def _string(s: str) -> bytes:
@@ -102,88 +84,110 @@ def _string(s: str) -> bytes:
 
 
 def _opt_string(s: Optional[str]) -> bytes:
-    return _zigzag(0) if s is None else _zigzag(1) + _string(s)
+    return b"\x00" if s is None else b"\x02" + _string(s)
 
 
 def _opt_long(v: Optional[int]) -> bytes:
-    return _zigzag(0) if v is None else _zigzag(1) + _zigzag(int(v))
-
-
-def _denan(v):
-    """pandas null sentinels (NaN/NaT) → None (nullable ints arrive as NaN)."""
-    return None if v is None or v != v else v
-
-
-def encode_dead_letter(d: dict) -> bytes:
-    """dict (DEAD_LETTER_SCHEMA shape) → Avro binary, .avsc field order."""
-    d = {k: _denan(v) for k, v in d.items()}
-    cause = {k: _denan(v) for k, v in (d.get("cause") or {}).items()}
-    ts = d.get("input_timestamp")
-    millis = None
-    if ts is not None:
-        millis = int(pd.Timestamp(ts).value // 1_000_000)
-    return b"".join(
-        [
-            _opt_string(d.get("input_value")),
-            _opt_string(d.get("topic")),
-            _opt_long(d.get("partition")),
-            _opt_long(d.get("offset")),
-            _string(d["description"]),
-            _opt_string(cause.get("error_class")),
-            _opt_string(cause.get("message")),
-            _opt_string(cause.get("stack_trace")),
-            _opt_long(millis),
-        ]
-    )
+    return b"\x00" if v is None else b"\x02" + _zigzag(int(v))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = acc = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
+    z, pos = read_varint(buf, pos)
+    return (z >> 1) ^ -(z & 1), pos
+
+
+# Flat-record codec: a record of primitives like the reference's serde
+# round-trip surface ``TestValue.avsc:1-29`` (three nullable strings).  The
+# INPUT edge decodes real Avro payloads with it (decode failures go to the
+# error branch via sources.serde.from_avro_captured); DeadLetter is one too.
+_FLAT_WRITERS = {
+    "string": _opt_string,
+    "int": _opt_long,  # Avro int/long share the varint encoding
+    "long": _opt_long,
+    "required string": _string,  # plain "string", not a union with null
+}
+
+
+def avro_flat_codec(fields):
+    """(encode, decode) for a flat record of primitives.
+
+    ``fields`` is a list of (name, type) with type in
+    {"string", "int", "long", "required string"} — every field but a
+    required string is the Avro union ``["null", type]`` (the TestValue
+    shape).  The decoder raises ``ValueError`` on truncated buffers, bad
+    union branches, and trailing bytes — the exact failures a serde
+    surfaces as SerializationException.
+    """
+    for _, t in fields:
+        if t not in _FLAT_WRITERS:
+            raise ValueError(f"unsupported flat-record field type {t!r}")
+    writers = [(n, _FLAT_WRITERS[t]) for n, t in fields]
+
+    def encode(d: dict) -> bytes:
+        return b"".join([w(d.get(n)) for n, w in writers])
+
+    def decode(buf: bytes) -> dict:
+        def rd(pos, t):
+            if t != "required string":
+                branch, pos = _read_long(buf, pos)
+                if branch == 0:
+                    return None, pos
+                if branch != 1:
+                    raise ValueError(f"bad union branch {branch} at {pos}")
+            if not t.endswith("string"):
+                return _read_long(buf, pos)
+            n, pos = _read_long(buf, pos)
+            if n < 0 or pos + n > len(buf):
+                raise ValueError("truncated string")
+            return buf[pos : pos + n].decode("utf-8"), pos + n
+
+        pos = 0
+        out = {}
+        try:
+            for n, t in fields:
+                out[n], pos = rd(pos, t)
+        except IndexError as exc:
+            raise ValueError("truncated record") from exc
+        if pos != len(buf):
+            raise ValueError(f"trailing bytes after record ({len(buf) - pos})")
+        return out
+
+    return encode, decode
+
+
+# DeadLetter in .avsc order, ``cause`` inline, named the way
+# wire.struct_encoder hands the struct's fields over.
+_DEAD_LETTER_FIELDS = [
+    ("input_value", "string"), ("topic", "string"), ("partition", "int"),
+    ("offset", "long"), ("description", "required string"),
+    ("cause.error_class", "string"), ("cause.message", "string"),
+    ("cause.stack_trace", "string"), ("input_timestamp", "long"),
+]
+_CAUSE = ("error_class", "message", "stack_trace")
+_encode_flat, _decode_flat = avro_flat_codec(_DEAD_LETTER_FIELDS)
+
+
+def _encode(rec: dict) -> bytes:
+    us = rec["input_timestamp"]
+    rec["input_timestamp"] = None if us is None else us // 1000  # timestamp-millis
+    return _encode_flat(rec)
+
+
+def encode_dead_letter(d: dict) -> bytes:
+    """dict (DEAD_LETTER_SCHEMA shape) → Avro binary, .avsc field order.
+    A naive ``input_timestamp`` is read as UTC."""
+    return _encode(flat_record(d))
 
 
 def decode_dead_letter(buf: bytes) -> dict:
-    """Inverse of :func:`encode_dead_letter` (round-trip testing / consumers)."""
-
-    def rd_opt_str(pos):
-        branch, pos = _read_long(buf, pos)
-        if branch == 0:
-            return None, pos
-        n, pos = _read_long(buf, pos)
-        return buf[pos : pos + n].decode("utf-8"), pos + n
-
-    def rd_opt_long(pos):
-        branch, pos = _read_long(buf, pos)
-        if branch == 0:
-            return None, pos
-        return _read_long(buf, pos)
-
-    pos = 0
-    out: dict[str, Any] = {}
-    out["input_value"], pos = rd_opt_str(pos)
-    out["topic"], pos = rd_opt_str(pos)
-    out["partition"], pos = rd_opt_long(pos)
-    out["offset"], pos = rd_opt_long(pos)
-    n, pos = _read_long(buf, pos)
-    out["description"] = buf[pos : pos + n].decode("utf-8")
-    pos += n
-    cause = {}
-    cause["error_class"], pos = rd_opt_str(pos)
-    cause["message"], pos = rd_opt_str(pos)
-    cause["stack_trace"], pos = rd_opt_str(pos)
-    out["cause"] = cause
-    millis, pos = rd_opt_long(pos)
-    out["input_timestamp"] = (
-        None if millis is None else pd.Timestamp(millis, unit="ms")
-    )
-    return out
+    """Inverse of :func:`encode_dead_letter` (round-trip testing /
+    consumers); ``input_timestamp`` comes back as a naive UTC ``datetime``.
+    Raises ``ValueError`` on a truncated buffer or trailing bytes."""
+    d = _decode_flat(buf)
+    d["cause"] = {k: d.pop(f"cause.{k}") for k in _CAUSE}
+    ms = d["input_timestamp"]
+    d["input_timestamp"] = None if ms is None else from_epoch_micros(ms * 1000)
+    return d
 
 
 _JVM_AVRO = {"checked": False, "ok": False}
@@ -223,107 +227,19 @@ def _avsc_ordered(dead_letter: Column) -> Column:
     Avro binary encoding is positional)."""
     from pyspark.sql import functions as F
 
-    d = dead_letter
-    return F.struct(
-        d["input_value"].alias("input_value"),
-        d["topic"].alias("topic"),
-        d["partition"].alias("partition"),
-        d["offset"].alias("offset"),
-        d["description"].alias("description"),
-        F.struct(
-            d["cause"]["error_class"].alias("error_class"),
-            d["cause"]["message"].alias("message"),
-            d["cause"]["stack_trace"].alias("stack_trace"),
-        ).alias("cause"),
-        d["input_timestamp"].alias("input_timestamp"),
-    )
+    cause = F.struct(*[dead_letter["cause"][n].alias(n) for n in _CAUSE])
+    top = dict.fromkeys(n.split(".")[0] for n, _ in _DEAD_LETTER_FIELDS)
+    return F.struct(*[(cause if n == "cause" else dead_letter[n]).alias(n) for n in top])
 
 
-def to_avro_dead_letter(dead_letter: Column, use_jvm: object = "auto") -> Column:
+def to_avro_dead_letter(dead_letter: Column) -> Column:
     """Column converter: dead-letter struct → Avro binary bytes
     (the ``AvroDeadLetterConverter`` analog, ``AvroDeadLetterConverter.java:34-49``).
 
-    ``use_jvm``: ``"auto"`` (default) uses the built-in JVM ``to_avro``
-    when the spark-avro module is loaded and the spec-encoder pandas UDF
-    otherwise; ``True`` requires the JVM path (raises if unavailable);
-    ``False`` forces the spec encoder (used by the cross-check test)."""
-    if use_jvm is True or use_jvm == "auto":
-        if jvm_avro_available():
-            from pyspark.sql.avro.functions import to_avro as _jvm_to_avro
+    Uses the built-in JVM ``to_avro`` when the spark-avro module is loaded
+    (:func:`jvm_avro_available`), the spec encoder otherwise."""
+    if jvm_avro_available():
+        from pyspark.sql.avro.functions import to_avro as _jvm_to_avro
 
-            return _jvm_to_avro(_avsc_ordered(dead_letter), DEAD_LETTER_AVSC)
-        if use_jvm is True:
-            raise RuntimeError(
-                "use_jvm=True but the spark-avro module is not loaded "
-                "(add org.apache.spark:spark-avro to spark.jars.packages)"
-            )
-
-    @pandas_udf(BinaryType())
-    def _enc(s: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a pd.DataFrame (one column per field)
-        recs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        return pd.Series(
-            [None if d is None else encode_dead_letter(d) for d in recs]
-        )
-
-    return _enc(dead_letter)
-
-
-# ---------------------------------------------------------------------------
-# Generic flat-record codec (input-side serde): the reference's serde
-# round-trip surface is records like TestValue.avsc — a flat record of
-# nullable primitives (``TestValue.avsc:1-29``, three nullable strings).
-# This builds spec encoder/decoder pairs for exactly that shape so the
-# INPUT edge can decode real Avro payloads (and route decode failures to
-# the error branch via sources.serde.from_avro_captured).
-# ---------------------------------------------------------------------------
-
-_FLAT_WRITERS = {
-    "string": _opt_string,
-    "int": _opt_long,  # Avro int/long share the varint encoding
-    "long": _opt_long,
-}
-
-
-def avro_flat_codec(fields):
-    """(encode, decode) for a flat record of nullable primitives.
-
-    ``fields`` is a list of (name, type) with type in
-    {"string", "int", "long"} — every field is the Avro union
-    ``["null", type]`` (the TestValue shape).  The decoder raises
-    ``ValueError`` on truncated buffers, bad union branches, and trailing
-    bytes — the exact failures a serde surfaces as SerializationException.
-    """
-    for _, t in fields:
-        if t not in _FLAT_WRITERS:
-            raise ValueError(f"unsupported flat-record field type {t!r}")
-
-    def encode(d: dict) -> bytes:
-        return b"".join(_FLAT_WRITERS[t](d.get(n)) for n, t in fields)
-
-    def decode(buf: bytes) -> dict:
-        def rd_opt(pos, is_str):
-            branch, pos = _read_long(buf, pos)
-            if branch == 0:
-                return None, pos
-            if branch != 1:
-                raise ValueError(f"bad union branch {branch} at {pos}")
-            if not is_str:
-                return _read_long(buf, pos)
-            n, pos = _read_long(buf, pos)
-            if n < 0 or pos + n > len(buf):
-                raise ValueError("truncated string")
-            return buf[pos : pos + n].decode("utf-8"), pos + n
-
-        pos = 0
-        out = {}
-        try:
-            for n, t in fields:
-                out[n], pos = rd_opt(pos, t == "string")
-        except IndexError as exc:
-            raise ValueError("truncated record") from exc
-        if pos != len(buf):
-            raise ValueError(f"trailing bytes after record ({len(buf) - pos})")
-        return out
-
-    return encode, decode
+        return _jvm_to_avro(_avsc_ordered(dead_letter), DEAD_LETTER_AVSC)
+    return struct_encoder(_encode)(dead_letter)

@@ -17,17 +17,18 @@ wrapper types = one-field messages).  Null handling mirrors
 ``ProtoDeadLetterConverter.java:41-78``: absent optional fields are simply
 omitted (wrappers encode presence); proto3 default-suppression means an
 empty string description is zero bytes, matching any standard decoder.
+It runs on the Arrow record path (:func:`.wire.struct_encoder`):
+``input_timestamp`` is the instant, whatever the session time zone, and a
+NULL dead letter encodes to NULL.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
-
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
+
+from .wire import flat_record, from_epoch_micros, read_varint, struct_encoder, varint
 
 __all__ = [
     "PROTO_DEAD_LETTER_SCHEMA",
@@ -62,105 +63,84 @@ message ProtoDeadLetter {
 """
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _tag(field: int, wire: int) -> bytes:
-    return _varint((field << 3) | wire)
+    return varint((field << 3) | wire)
 
 
 def _len_field(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
+    return _tag(field, 2) + varint(len(payload)) + payload
 
 
-def _string_value(s: str) -> bytes:
-    """google.protobuf.StringValue: field 1, string."""
-    raw = s.encode("utf-8")
-    return _len_field(1, raw) if raw else b""  # proto3 default suppression
+def _signed(v: int) -> int:
+    """Two's-complement 64-bit varint value → int."""
+    return v - (1 << 64) if v >= 1 << 63 else v
 
 
-def _int_value(v: int) -> bytes:
-    """Int32Value/Int64Value: field 1, varint (two's-complement 64-bit for
-    negatives, per proto spec)."""
-    if v == 0:
+def _string_value(field: int, s: Optional[str]) -> bytes:
+    """google.protobuf.StringValue submessage (field 1, string); absent
+    when ``s`` is None."""
+    if s is None:
         return b""
-    return _tag(1, 0) + _varint(v & 0xFFFFFFFFFFFFFFFF)
+    raw = s.encode("utf-8")
+    return _len_field(field, _len_field(1, raw) if raw else b"")  # proto3 default suppression
 
 
-def _timestamp(seconds: int, nanos: int) -> bytes:
-    out = b""
-    if seconds:
-        out += _tag(1, 0) + _varint(seconds & 0xFFFFFFFFFFFFFFFF)
+def _int_value(field: int, v: Optional[int]) -> bytes:
+    """Int32Value/Int64Value submessage (field 1, varint, two's-complement
+    64-bit for negatives, per proto spec); absent when ``v`` is None."""
+    if v is None:
+        return b""
+    v = int(v)
+    return _len_field(field, _tag(1, 0) + varint(v & 0xFFFFFFFFFFFFFFFF) if v else b"")
+
+
+def _timestamp(us: Optional[int]) -> bytes:
+    """google.protobuf.Timestamp (seconds=1, nanos=2) of epoch micros."""
+    if us is None:
+        return b""
+    seconds, nanos = divmod(us, 1_000_000)
+    out = _tag(1, 0) + varint(seconds & 0xFFFFFFFFFFFFFFFF) if seconds else b""
     if nanos:
-        out += _tag(2, 0) + _varint(nanos)
-    return out
+        out += _tag(2, 0) + varint(nanos * 1000)
+    return _len_field(7, out)
 
 
-def _denan(v):
-    """pandas null sentinels (NaN/NaT) → None (nullable ints arrive as NaN)."""
-    return None if v is None or v != v else v
+_CAUSE = ("message", "stack_trace", "error_class")  # Cause fields 1..3
+
+
+def _encode(rec: dict) -> bytes:
+    """Flat dead letter (:func:`.wire.flat_record` shape) → wire bytes,
+    fields in ascending number order."""
+    desc = (rec.get("description") or "").encode("utf-8")
+    cause = b"".join(_string_value(i, rec.get(f"cause.{n}")) for i, n in enumerate(_CAUSE, 1))
+    return b"".join(
+        [
+            _len_field(1, desc) if desc else b"",
+            _len_field(2, cause),
+            _string_value(3, rec.get("input_value")),
+            _string_value(4, rec.get("topic")),
+            _int_value(5, rec.get("partition")),
+            _int_value(6, rec.get("offset")),
+            _timestamp(rec.get("input_timestamp")),
+        ]
+    )
 
 
 def encode_proto_dead_letter(d: dict) -> bytes:
-    d = {k: _denan(v) for k, v in d.items()}
-    cause = {k: _denan(v) for k, v in (d.get("cause") or {}).items()}
-    out = b""
-    desc = (d.get("description") or "").encode("utf-8")
-    if desc:
-        out += _len_field(1, desc)
-    cause_payload = b""
-    if cause.get("message") is not None:
-        cause_payload += _len_field(1, _string_value(cause["message"]))
-    if cause.get("stack_trace") is not None:
-        cause_payload += _len_field(2, _string_value(cause["stack_trace"]))
-    if cause.get("error_class") is not None:
-        cause_payload += _len_field(3, _string_value(cause["error_class"]))
-    if cause_payload or cause:
-        out += _len_field(2, cause_payload)
-    if d.get("input_value") is not None:
-        out += _len_field(3, _string_value(d["input_value"]))
-    if d.get("topic") is not None:
-        out += _len_field(4, _string_value(d["topic"]))
-    if d.get("partition") is not None:
-        out += _len_field(5, _int_value(int(d["partition"])))
-    if d.get("offset") is not None:
-        out += _len_field(6, _int_value(int(d["offset"])))
-    ts = d.get("input_timestamp")
-    if ts is not None:
-        t = pd.Timestamp(ts)
-        out += _len_field(7, _timestamp(t.value // 1_000_000_000, t.value % 1_000_000_000))
-    return out
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = acc = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return acc, pos
-        shift += 7
+    """dict (DEAD_LETTER_SCHEMA shape) → proto3 wire bytes.  A naive
+    ``input_timestamp`` is read as UTC."""
+    return _encode(flat_record(d))
 
 
 def _decode_fields(buf: bytes) -> dict[int, list]:
     pos, out = 0, {}
     while pos < len(buf):
-        key, pos = _read_varint(buf, pos)
+        key, pos = read_varint(buf, pos)
         field, wire = key >> 3, key & 7
         if wire == 0:
-            v, pos = _read_varint(buf, pos)
+            v, pos = read_varint(buf, pos)
         elif wire == 2:
-            n, pos = _read_varint(buf, pos)
+            n, pos = read_varint(buf, pos)
             v = buf[pos : pos + n]
             pos += n
         else:  # pragma: no cover - no other wire types in this schema
@@ -180,14 +160,12 @@ def _get_wrapper_int(fields: dict, n: int) -> Optional[int]:
     if n not in fields:
         return None
     inner = _decode_fields(fields[n][-1])
-    v = inner.get(1, [0])[-1] if 1 in inner else 0
-    if v >= 1 << 63:
-        v -= 1 << 64
-    return v
+    return _signed(inner.get(1, [0])[-1])
 
 
 def decode_proto_dead_letter(buf: bytes) -> dict:
-    """Standard-decoder stand-in for round-trip tests."""
+    """Standard-decoder stand-in for round-trip tests; ``input_timestamp``
+    comes back as a naive UTC ``datetime``."""
     f = _decode_fields(buf)
     out = {
         "description": f.get(1, [b""])[-1].decode("utf-8") if 1 in f else "",
@@ -196,22 +174,13 @@ def decode_proto_dead_letter(buf: bytes) -> dict:
         "partition": _get_wrapper_int(f, 5),
         "offset": _get_wrapper_int(f, 6),
     }
-    cause = {}
-    if 2 in f:
-        cf = _decode_fields(f[2][-1])
-        cause = {
-            "message": _get_wrapper_str(cf, 1),
-            "stack_trace": _get_wrapper_str(cf, 2),
-            "error_class": _get_wrapper_str(cf, 3),
-        }
-    out["cause"] = cause
+    cf = _decode_fields(f[2][-1]) if 2 in f else None
+    out["cause"] = {} if cf is None else {n: _get_wrapper_str(cf, i) for i, n in enumerate(_CAUSE, 1)}
+    out["input_timestamp"] = None
     if 7 in f:
         tf = _decode_fields(f[7][-1])
-        secs = tf.get(1, [0])[-1]
-        nanos = tf.get(2, [0])[-1]
-        out["input_timestamp"] = pd.Timestamp(secs * 1_000_000_000 + nanos)
-    else:
-        out["input_timestamp"] = None
+        secs = _signed(tf.get(1, [0])[-1])
+        out["input_timestamp"] = from_epoch_micros(secs * 1_000_000 + tf.get(2, [0])[-1] // 1000)
     return out
 
 
@@ -245,9 +214,7 @@ def jvm_protobuf_available(spark=None) -> bool:
 
 
 def to_proto_dead_letter(
-    dead_letter: Column,
-    desc_file_path: Optional[str] = None,
-    message_name: str = "ProtoDeadLetter",
+    dead_letter: Column, desc_file_path: Optional[str] = None
 ) -> Column:
     """Column converter (the ``ProtoDeadLetterConverter`` analog,
     ``ProtoDeadLetterConverter.java:40-78``).
@@ -256,20 +223,11 @@ def to_proto_dead_letter(
     for the reference's ``deadletter.proto``) is supplied AND the
     spark-protobuf module is loaded, encodes via the built-in
     ``to_protobuf`` — no Python in the hot path.  Otherwise falls back to
-    the spec encoder below (proto3 wire bytes are deterministic for this
+    the spec encoder above (proto3 wire bytes are deterministic for this
     schema: fields ascend by number, wrappers suppress defaults — both
     encoders emit identical bytes)."""
     if desc_file_path is not None and jvm_protobuf_available():
         from pyspark.sql.protobuf.functions import to_protobuf
 
-        return to_protobuf(dead_letter, message_name, desc_file_path)
-
-    @pandas_udf(BinaryType())
-    def _enc(s: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a pd.DataFrame (one column per field)
-        recs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        return pd.Series(
-            [None if d is None else encode_proto_dead_letter(d) for d in recs]
-        )
-
-    return _enc(dead_letter)
+        return to_protobuf(dead_letter, "ProtoDeadLetter", desc_file_path)
+    return struct_encoder(_encode)(dead_letter)

@@ -127,7 +127,6 @@ def to_avro_dead_letter_framed(
     registry: Optional[SchemaRegistryStub] = None,
     subject: str = "dead-letter-value",
     schema_id: Optional[int] = None,
-    use_jvm: object = "auto",
 ) -> Column:
     """Registry-framed Avro dead letter (what a ``SpecificAvroSerde``
     consumer with the same registry reads back).
@@ -141,7 +140,7 @@ def to_avro_dead_letter_framed(
         if registry is None:
             raise ValueError("pass either registry or schema_id")
         schema_id = registry.register(subject, DEAD_LETTER_AVSC)
-    return frame_confluent(to_avro_dead_letter(dead_letter, use_jvm=use_jvm), schema_id)
+    return frame_confluent(to_avro_dead_letter(dead_letter), schema_id)
 
 
 def to_proto_dead_letter_framed(

@@ -119,6 +119,12 @@ def _pylist(col: pa.Array) -> list:
     return vals
 
 
+def _records(batch: pa.RecordBatch) -> list:
+    """One Arrow batch as row dicts, column name → value."""
+    names = batch.schema.names
+    return [dict(zip(names, row)) for row in zip(*map(_pylist, batch.columns))]
+
+
 def _non_integral(v: Any) -> bool:
     """A number pyarrow would truncate into an integral type (``1.5`` → ``1``)."""
     if type(v) is int or not isinstance(v, Number) or isinstance(v, Integral):
@@ -546,9 +552,7 @@ def _process(
 
     def _map(batches):
         for batch in batches:
-            names = batch.schema.names
-            recs = [(dict(zip(names, row)),) for row in zip(*map(_pylist, batch.columns))]
-            take, res, err = loop.run(recs)
+            take, res, err = loop.run([(rec,) for rec in _records(batch)])
             passed = batch.select(keep).take(pa.array(take, pa.int64()))
             yield pa.RecordBatch.from_arrays(passed.columns + [res, err], names=out_names)
 

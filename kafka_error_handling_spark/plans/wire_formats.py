@@ -29,12 +29,12 @@ Fixture constraint: numeric fields are non-negative (negative zig-zag /
 two's-complement varints are covered by the pytest round-trips; keeping
 the SQL varint non-negative keeps the oracle readable).
 
-Timezone: the timestamp fixture is WALL-TIME-stable across session
-timezones — Spark parses the string in the session TZ and the pandas
-encoder receives the session-local wall time back (Arrow re-localizes),
-so it encodes the same epoch the DuckDB oracle derives from the same
-literal parsed as UTC.  Pinned empirically by the TZ=America/New_York
-perturbation sweep (runs/sweeps.json `tz`), which runs both gates.
+Timezone: the encoders write ``input_timestamp`` as the instant (what
+the JVM ``to_avro`` writes), so the fixture's ``ts_string`` is parsed on
+the engine side as a UTC instant (a ``Z`` is appended before the cast),
+the same epoch the DuckDB oracle derives from the same literal, whatever
+the session time zone.  Pinned by the TZ=America/New_York perturbation
+sweep (runs/sweeps.json `tz`), which runs both gates.
 """
 
 from __future__ import annotations
@@ -89,7 +89,7 @@ def _dead_letter_col():
         F.col("topic").alias("topic"),
         F.col("partition").alias("partition"),
         F.col("offset").alias("offset"),
-        F.col("ts_string").cast("timestamp").alias("input_timestamp"),
+        F.concat(F.col("ts_string"), F.lit("Z")).cast("timestamp").alias("input_timestamp"),
     )
 
 

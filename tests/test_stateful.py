@@ -145,3 +145,74 @@ def test_stateful_running_totals_match_batch_across_microbatches(spark, tmp_path
     errs = [r for r in rows if r["error"] is not None]
     assert len(errs) == 1 and errs[0]["user_id"] == 2
     assert errs[0]["error"]["error_class"] == "ValueError"
+
+
+def _run_stateful(spark, tmp_path, lines, schema, fn, result_type, state_type, **kw):
+    """Drain ``lines`` (JSON) through ``capture_stateful_process`` keyed by
+    ``key``; the output rows."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text("\n".join(lines) + "\n")
+    stream = spark.readStream.schema(schema).json(str(src))
+    out = capture_stateful_process(stream, ["key"], fn, result_type, state_type, **kw)
+    rows = []
+    q = (
+        out.writeStream.foreachBatch(lambda df, bid: rows.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return rows
+
+
+def test_stateful_wrong_typed_forward_is_one_error_row(spark, tmp_path):
+    """A forward that does not convert to ``result_type`` (``"x"`` for a
+    ``long``) becomes one ResultTypeError row for its record; the other
+    records and the group's state are unaffected."""
+
+    def fn(key, rec, state):
+        (n,) = state.get if state.exists else (0,)
+        n += 1
+        state.update((n,))
+        count = "x" if rec["value"] == "BAD" else n
+        return [{"value": rec["value"], "running_count": count}]
+
+    rows = _run_stateful(
+        spark,
+        tmp_path,
+        ['{"key": 1, "value": "a"}', '{"key": 1, "value": "BAD"}',
+         '{"key": 1, "value": "b"}', '{"key": 2, "value": "c"}'],
+        "key int, value string",
+        fn,
+        RESULT_T,
+        STATE_T,
+        input_value_col="value",
+    )
+    ok = sorted((r.key, r.result.value, r.result.running_count) for r in rows if r.error is None)
+    errs = [(r.key, r.error.error_class, r.error.input_value) for r in rows if r.error is not None]
+    assert ok == [(1, "a", 1), (1, "b", 3), (2, "c", 1)]
+    assert errs == [(1, "ResultTypeError", "BAD")]
+
+
+def test_stateful_inputs_null_as_none_and_ints_as_int(spark, tmp_path):
+    """Records reach ``fn`` under the capture loop's input contract: a NULL
+    int as ``None``, a non-NULL one as ``int`` (pandas alone gives ``nan``
+    and ``1.0``)."""
+    seen_t = StructType([StructField("value", StringType())])
+
+    def fn(key, rec, state):
+        n = rec["n"]
+        return [{"value": f"{type(n).__name__}:{n}"}]
+
+    rows = _run_stateful(
+        spark,
+        tmp_path,
+        ['{"key": 1, "n": 1}', '{"key": 1, "n": null}'],
+        "key int, n int",
+        fn,
+        seen_t,
+        STATE_T,
+    )
+    assert all(r.error is None for r in rows)
+    assert sorted(r.result.value for r in rows) == ["NoneType:None", "int:1"]
