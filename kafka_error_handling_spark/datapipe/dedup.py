@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..conf import fits_driver, regime_mode
 from ..sources.files import load_table
 
 __all__ = [
@@ -202,13 +203,34 @@ _SIG_BROADCAST_SLACK = 2  # row/struct overhead headroom over raw 64×8 B
 
 def _broadcast_signatures(spark: SparkSession, n_docs: int) -> bool:
     """True → the prefilter may broadcast the signature frame."""
-    mode = str(spark.conf.get(SIG_BROADCAST_CONF, "auto")).strip().lower()
-    if mode in ("true", "false"):
-        return mode == "true"
-    from ..conf import driver_max_result_bytes
+    return fits_driver(
+        spark, n_docs, NUM_PERM * 8 * _SIG_BROADCAST_SLACK, SIG_BROADCAST_CONF
+    )
 
-    budget = driver_max_result_bytes(spark)
-    return n_docs * NUM_PERM * 8 * _SIG_BROADCAST_SLACK <= budget
+
+def _participant_sets(d: DataFrame, strong: DataFrame, n_strong: int) -> DataFrame:
+    """Exact shingle sets of the strong-pair participants only (left-semi
+    prune before the second shingle explode), eagerly localCheckpointed.
+
+    The pruned pass scales with the participant count, not the corpus.
+    The participant ids (≤ 2·n_strong longs) are broadcast into the
+    semi-join while they fit the driver byte budget: the checkpointed
+    strong frame is stats-free, so Catalyst would otherwise plan a
+    SortMergeJoin that SHUFFLES THE CORPUS SCAN; above the budget the
+    join strategy is left to Catalyst/AQE.  The checkpoint (r15): `sets`
+    feeds BOTH pair-side joins and Catalyst inlines the semi-join +
+    shingle-explode + collect_set subtree once PER SIDE (the r14
+    postexec census showed the fan-out executing twice); behind the
+    semi-prune it is a small-row materialization, not a corpus spill."""
+    ids = (
+        strong.select(F.col("id_a").alias("doc_id"))
+        .union(strong.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
+    bytes_per_id = 8 * _SIG_BROADCAST_SLACK
+    if fits_driver(d.sparkSession, 2 * n_strong, bytes_per_id, "dedup.participant_ids"):
+        ids = broadcast(ids)
+    return shingle_sets(d.join(ids, "doc_id", "left_semi")).localCheckpoint(eager=True)
 
 
 def lsh_candidate_pairs(
@@ -519,6 +541,8 @@ def q_dedup_minhash_lsh(
     expressions cost ~2.5 s/call to assemble Column-by-Column over py4j,
     vs milliseconds to parse JVM-side.  The plans are identical.
     """
+    # read before any view/cache is created: a bad conf value raises here
+    bcast_sig = regime_mode(spark, SIG_BROADCAST_CONF)
     # ``docs`` override: the stress harness feeds a disjoint-replicated
     # frame through the EXACT gate pipeline (incl. the prefilter regime
     # selection) instead of a parallel reimplementation
@@ -547,10 +571,7 @@ def q_dedup_minhash_lsh(
     # VERDICT r8 #3).  The persisted sig now materializes lazily inside
     # the strong-pairs job, restoring the fused shape; a forced regime
     # (conf true/false) skips the probe entirely.
-    mode = str(spark.conf.get(SIG_BROADCAST_CONF, "auto")).strip().lower()
-    if mode in ("true", "false"):
-        bcast_sig = mode == "true"
-    else:
+    if bcast_sig is None:
         bcast_sig = _broadcast_signatures(spark, d.count())
     strong_df = spark.sql(strong_pairs_sql(sig_v, broadcast_signatures=bcast_sig))
     # persist + count + branch — NOT limit(CAP+1).collect(): a limit-probe
@@ -577,31 +598,7 @@ def q_dedup_minhash_lsh(
         strong_df.unpersist()
         strong_df = checkpointed
         spark.catalog.dropTempView(docs_v)
-        ids = (
-            strong_df.select(F.col("id_a").alias("doc_id"))
-            .union(strong_df.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        # participant-id prune: ids ≤ 2·n_strong longs, so the same byte
-        # budget decides — broadcast the semi-join side while it fits,
-        # else leave the join strategy to Catalyst/AQE (no hint)
-        from ..conf import driver_max_result_bytes
-
-        if 2 * n_strong * 8 * _SIG_BROADCAST_SLACK <= driver_max_result_bytes(spark):
-            ids = broadcast(ids)
-        # eager localCheckpoint (r15, the q_minhash_est_error fix): `sets`
-        # feeds BOTH pair-side joins and Catalyst inlines the semi-join +
-        # shingle-explode + collect_set subtree once per side — above the
-        # strong-pair cap that re-ran the participant fan-out twice
-        # (measured in the ×10 stress, where this fallback is the active
-        # path).  Participant-bounded by the semi-prune, so the cut is
-        # small-row materialization, not a corpus spill.
-        sets = (
-            _shingle_df(d.join(ids, "doc_id", "left_semi"), "doc_id", "text")
-            .groupBy("doc_id")
-            .agg(F.collect_set("h").alias("hs"))
-            .localCheckpoint(eager=True)
-        )
+        sets = _participant_sets(d, strong_df, n_strong)
         out = (
             strong_df.join(
                 sets.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("ha")),
@@ -905,40 +902,11 @@ def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strong is referenced three times below (two id projections + the
     # final join): eager localCheckpoint, not persist (no caller handle)
     strong = strong.localCheckpoint(eager=True)
-    # exact sets ONLY for pair participants (left-semi prune before the
-    # second shingle explode).  Locally this is ~1s SLOWER than the lazy
-    # full-corpus pass (the two checkpoint barriers serialize stages the
-    # lazy plan overlapped), but it is the 100 TB shape: the unpruned
-    # second explode scales with the CORPUS while this scales with the
-    # strong-pair participant count
-    ids = (
-        strong.select(F.col("id_a").alias("doc_id"))
-        .union(strong.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    # participant-id broadcast under the shared byte budget (r14): the
-    # checkpointed strong frame is stats-free, so Catalyst planned the
-    # semi-join as a SortMergeJoin that SHUFFLED THE CORPUS SCAN (twice —
-    # the sets subtree is inlined per pair side).  n_strong bounds the id
-    # set and reading it off the local checkpoint blocks is cheap; above
-    # the budget the hint stays off exactly like q_dedup_minhash_lsh's
-    # distributed fallback.
-    from ..conf import driver_max_result_bytes
-
-    n_strong = strong.count()
-    if 2 * n_strong * 8 * _SIG_BROADCAST_SLACK <= driver_max_result_bytes(spark):
-        ids = broadcast(ids)
-    # eager localCheckpoint (r15): `sets` feeds BOTH pair-side joins and
-    # Catalyst inlines the semi-join + shingle-explode + collect_set
-    # subtree once PER SIDE — the r14 postexec census and the r15
-    # before-plan both show the fan-out executing twice (two Generate
-    # nodes over two documents scans).  The frame is bounded by the
-    # strong-pair participant count (it sits behind the semi-prune), so
-    # the lineage cut is the §3.3 "materialize the shared intermediate"
-    # shape, not a corpus-sized spill.
-    sets = shingle_sets(d.join(ids, "doc_id", "left_semi")).localCheckpoint(
-        eager=True
-    )
+    # exact sets ONLY for pair participants.  Locally this is ~1s SLOWER
+    # than the lazy full-corpus pass (the two checkpoint barriers
+    # serialize stages the lazy plan overlapped), but it is the 100 TB
+    # shape: the unpruned second explode scales with the CORPUS
+    sets = _participant_sets(d, strong, strong.count())
     exact = F.round(
         F.size(F.array_intersect("ha", "hb")) / F.size(F.array_union("ha", "hb")), 4
     )

@@ -691,20 +691,10 @@ def decontaminate_semantic(
         StructType,
     )
 
-    from .similarity import MAX_QUERY_VECTORS
+    from .similarity import _take_query_set
 
     spark = corpus_emb.sparkSession
-    # the bench matrix is driver-collected and broadcast: a corpus-sized
-    # bench frame would OOM the driver first — fail loudly with the bound
-    # (take(), not limit().collect() — the incremental-limit probe re-runs
-    # the upstream pipeline, the knn_bruteforce_arrow lesson)
-    brows = bench_emb.select(id_col, vec_col).take(MAX_QUERY_VECTORS + 1)
-    if len(brows) > MAX_QUERY_VECTORS:
-        raise ValueError(
-            f"benchmark set exceeds MAX_QUERY_VECTORS={MAX_QUERY_VECTORS}; "
-            "decontaminate_semantic broadcasts the bench matrix — for "
-            "corpus-sized screens use the bucketed LSH paths"
-        )
+    brows = _take_query_set(bench_emb, id_col, vec_col, "decontaminate_semantic")
     brows.sort(key=lambda r: r[0])  # ids ascending → argmax first-hit = min id
     bids = np.array([r[0] for r in brows], dtype=np.int64)
     B = np.array([list(r[1]) for r in brows], dtype=np.float64)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..conf import bounded_collect, fits_driver
 from ..sources.files import load_table as _t
 
 # total rank mass, parts-per-1e12 — big enough that `rank DIV deg` keeps
@@ -45,24 +46,9 @@ PR_TOPK = 20
 # spark.driver.maxResultSize at a conservative 512 bytes/node — the
 # N=300 probe measured ~180 B/node effective on the rank-frame broadcast
 # collect (6M nodes blew the 1 GiB default; 2M, the N=100 stress record,
-# was green), so 512 keeps ~2x slack and lands on exactly 2M nodes at
-# the 1g default (ADVICE r6: a byte budget, not a hardcoded node count).
-# PR_BROADCAST_MAX_NODES is the fallback when maxResultSize is unlimited.
-PR_BROADCAST_MAX_NODES = 2_000_000
+# was green), so 512 keeps ~2x slack and lands on 2 Mi (2 097 152) nodes
+# at the 1g default (ADVICE r6: a byte budget, not a hardcoded node count).
 PR_BROADCAST_BYTES_PER_NODE = 512
-
-
-def _broadcast_max_nodes(spark: SparkSession) -> int:
-    """Broadcast-regime node ceiling from ``spark.driver.maxResultSize``.
-
-    Uses the shared bytesConf parser (``conf.driver_max_result_bytes``,
-    MiB default unit per ADVICE r7); when the conf is unset/unlimited the
-    parser's 1 GiB default reproduces the last-known-green static cap
-    (``PR_BROADCAST_MAX_NODES`` = 1 GiB / 512 B-per-node).
-    """
-    from ..conf import driver_max_result_bytes
-
-    return driver_max_result_bytes(spark) // PR_BROADCAST_BYTES_PER_NODE
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -117,7 +103,8 @@ def pagerank_scaled(
     one row per node and already checkpoint-materialized, so its count is
     a cheap bounded scalar, and the broadcast regime is used only while
     |V| fits the session's ``spark.driver.maxResultSize`` byte budget
-    (:func:`_broadcast_max_nodes`) — the same query survives any graph
+    (:func:`~kafka_error_handling_spark.conf.fits_driver` at
+    :data:`PR_BROADCAST_BYTES_PER_NODE`) — the same query survives any graph
     size without the caller knowing the crossover.  (The auto-probe runs
     one count() at DataFrame-construction time; pass an explicit bool in
     plan-only contexts that must not launch jobs.)
@@ -130,7 +117,12 @@ def pagerank_scaled(
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     deg = deg.localCheckpoint(eager=True)  # one row per node — tiny
     if broadcast_ranks is None:
-        broadcast_ranks = deg.count() <= _broadcast_max_nodes(edges.sparkSession)
+        broadcast_ranks = fits_driver(
+            edges.sparkSession,
+            deg.count(),
+            PR_BROADCAST_BYTES_PER_NODE,
+            "graph.pagerank_scaled",
+        )
     hint = F.broadcast if broadcast_ranks else (lambda df: df)
     ed = edges.join(hint(deg), "src")
 
@@ -731,7 +723,6 @@ def kcore_rounds(
     edges: DataFrame,
     rounds: int = KCORE_ROUNDS,
     k: int = KCORE_K,
-    driver_peel: bool | None = None,
 ) -> DataFrame:
     """Size of the graph after each of ``rounds`` rounds of k-core
     peeling (drop nodes with degree < ``k``, recompute degrees on the
@@ -746,31 +737,18 @@ def kcore_rounds(
     unrolled CTEs) evaluate the identical bounded fixpoint — full k-core
     convergence is the while-loop version of exactly this round body.
 
-    ``driver_peel=None`` (auto) engages the r15 driver regime while the
-    edge list fits the ``spark.driver.maxResultSize``-derived byte
-    budget (:data:`CC_BYTES_PER_EDGE` pricing, one bounded ``take()``
-    that doubles as the collect); an explicit bool or the
-    :data:`KCORE_DRIVER_CONF` conf pins either regime."""
+    The r15 driver regime engages while the edge list fits the
+    ``spark.driver.maxResultSize``-derived byte budget
+    (:func:`~kafka_error_handling_spark.conf.bounded_collect` at
+    :data:`CC_BYTES_PER_EDGE`); the :data:`KCORE_DRIVER_CONF` conf pins
+    either regime."""
     spark = edges.sparkSession
-    if driver_peel is None:
-        mode = str(spark.conf.get(KCORE_DRIVER_CONF, "auto")).strip().lower()
-        if mode in ("true", "false"):
-            driver_peel = mode == "true"
-    if driver_peel is True:
+    collected = bounded_collect(edges, CC_BYTES_PER_EDGE, KCORE_DRIVER_CONF)
+    if collected is not None:
         return spark.createDataFrame(
-            _driver_kcore_rows(edges.collect(), rounds, k),
+            _driver_kcore_rows(collected, rounds, k),
             "round long, n_nodes long, n_edges long",
         )
-    if driver_peel is None:
-        from ..conf import driver_max_result_bytes
-
-        budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
-        probe = edges.take(budget + 1)
-        if len(probe) <= budget:
-            return spark.createDataFrame(
-                _driver_kcore_rows(probe, rounds, k),
-                "round long, n_nodes long, n_edges long",
-            )
     rows = []
     cur = edges
     for rnd in range(1, rounds + 1):
@@ -928,8 +906,9 @@ def connected_components(
       node key so every round reuses one exchange layout;
     - the regime guard: labels are broadcast per round only while |V|
       fits the ``spark.driver.maxResultSize``-derived byte budget
-      (:func:`_broadcast_max_nodes`), else the joins run key-shuffled
-      and nothing node-count-shaped ever reaches the driver;
+      (:func:`~kafka_error_handling_spark.conf.fits_driver`), else the
+      joins run key-shuffled and nothing node-count-shaped ever reaches
+      the driver;
     - CONVERGENCE is detected from one 1-row aggregate per round: labels
       only ever decrease under min-propagation, so the label-sum is
       strictly decreasing until fixpoint and "sum unchanged" == "no
@@ -966,17 +945,9 @@ def connected_components(
     stops early), against the ≥6 full passes the loop replaces.
     """
     if broadcast_labels is None:
-        from ..conf import driver_max_result_bytes
-
-        spark = edges.sparkSession
-        mode = str(spark.conf.get(CC_DRIVER_UF_CONF, "auto")).strip().lower()
-        if mode == "true":
-            return _driver_union_find(edges, edges.collect())
-        if mode != "false":
-            budget = driver_max_result_bytes(spark) // CC_BYTES_PER_EDGE
-            rows = edges.take(budget + 1)
-            if len(rows) <= budget:
-                return _driver_union_find(edges, rows)
+        collected = bounded_collect(edges, CC_BYTES_PER_EDGE, CC_DRIVER_UF_CONF)
+        if collected is not None:
+            return _driver_union_find(edges, collected)
     nb = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -994,7 +965,12 @@ def connected_components(
     if broadcast_labels is None:
         # same bounded scalar probe as pagerank_scaled: lab is one row per
         # node and already materialized, so count() is cheap
-        broadcast_labels = lab.count() <= _broadcast_max_nodes(edges.sparkSession)
+        broadcast_labels = fits_driver(
+            edges.sparkSession,
+            lab.count(),
+            PR_BROADCAST_BYTES_PER_NODE,
+            "graph.connected_components",
+        )
     hint = F.broadcast if broadcast_labels else (lambda df: df)
 
     prev_sum = None

@@ -1044,51 +1044,50 @@ def test_connected_components_raises_on_round_budget(spark):
         connected_components(edges, broadcast_labels=True, max_rounds=1).collect()
 
 
+class _StubConf:
+    def __init__(self, v):
+        self._v = v
+
+    def get(self, key, default=None):
+        return self._v
+
+
+class _StubSpark:
+    """``spark.driver.maxResultSize`` is a static conf
+    (``spark.conf.set`` raises CANNOT_MODIFY_CONFIG), so budget tests
+    read it through a stub."""
+
+    def __init__(self, v):
+        self.conf = _StubConf(v)
+
+
 def test_broadcast_max_nodes_parses_size_strings(spark):
-    from kafka_error_handling_spark.plans.graph import (
-        PR_BROADCAST_BYTES_PER_NODE,
-        PR_BROADCAST_MAX_NODES,
-        _broadcast_max_nodes,
-    )
+    """The PageRank/CC broadcast crossover: 1 GiB / 512 B-per-node
+    admits 2 Mi (2 097 152) nodes — at least the 2M-node last-known-green
+    cap the byte budget replaced — and not one more."""
+    from kafka_error_handling_spark.conf import fits_driver
+    from kafka_error_handling_spark.plans.graph import PR_BROADCAST_BYTES_PER_NODE
 
-    # session default is 1g unless configured: 1 GiB / 512 B = 2M nodes —
-    # exactly the last-known-green static cap the byte budget replaces
-    assert _broadcast_max_nodes(spark) in (
-        (1 << 30) // PR_BROADCAST_BYTES_PER_NODE,
-        PR_BROADCAST_MAX_NODES,
-    )
+    one_gib = _StubSpark("1g")
+    assert fits_driver(one_gib, 2_000_000, PR_BROADCAST_BYTES_PER_NODE, "test")
+    assert fits_driver(one_gib, 1 << 21, PR_BROADCAST_BYTES_PER_NODE, "test")
+    assert not fits_driver(one_gib, (1 << 21) + 1, PR_BROADCAST_BYTES_PER_NODE, "test")
 
 
-def test_driver_max_result_bytes_unit_parsing():
-    """The bytesConf plain-number unit is MiB (ADVICE r7): '1024' is 1 GiB,
-    not 1024 bytes — the bytes misread gave a 2-node ceiling that silently
-    disabled the broadcast regime."""
+def test_driver_max_result_bytes_unit_parsing(spark):
+    """The budget is the one Spark enforces: every value reads exactly as
+    Spark's own bytesConf parser reads it — a plain number is BYTES
+    ("4096" failed a 2-task collect as "bigger than
+    spark.driver.maxResultSize (4.0 KiB)"), and 0 (unlimited) maps to
+    the 1 GiB default."""
     from kafka_error_handling_spark.conf import driver_max_result_bytes
 
-    class _Conf:
-        def __init__(self, v):
-            self._v = v
-
-        def get(self, key, default=None):
-            return self._v if self._v is not None else default
-
-    class _Spark:
-        def __init__(self, v):
-            self.conf = _Conf(v)
-
-    assert driver_max_result_bytes(_Spark("1g")) == 1 << 30
-    assert driver_max_result_bytes(_Spark("512m")) == 512 << 20
-    assert driver_max_result_bytes(_Spark("2gb")) == 2 << 30
-    assert driver_max_result_bytes(_Spark("1024")) == 1 << 30  # MiB default unit
-    # lone 'b' suffix is BYTES in Spark's byteStringAs (ADVICE r8) — it is
-    # not the MiB default unit and not a stripped no-op
-    assert driver_max_result_bytes(_Spark("100b")) == 100
-    assert driver_max_result_bytes(_Spark("1k")) == 1 << 10
-    assert driver_max_result_bytes(_Spark("1kb")) == 1 << 10
-    assert driver_max_result_bytes(_Spark("0b")) == 1 << 30  # unlimited -> default
-    assert driver_max_result_bytes(_Spark("0")) == 1 << 30  # unlimited -> default
-    assert driver_max_result_bytes(_Spark("nonsense")) == 1 << 30
-    assert driver_max_result_bytes(_Spark(None)) == 1 << 30
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    for raw in ("1024", "4096", "1g", "512m", "2gb", "100b", "1k", "1kb", " 2G "):
+        assert driver_max_result_bytes(_StubSpark(raw)) == java_utils.byteStringAsBytes(raw)
+    assert driver_max_result_bytes(_StubSpark("4096")) == 4096
+    assert driver_max_result_bytes(_StubSpark("0")) == 1 << 30
+    assert driver_max_result_bytes(_StubSpark("0b")) == 1 << 30
 
 
 def test_connected_components_empty_edges_converges(spark):
@@ -1115,7 +1114,11 @@ def test_kcore_driver_peel_matches_distributed_loop(spark, monkeypatch):
     edges = spark.createDataFrame(clique + tail + cyc, "src long, dst long")
 
     auto = G.kcore_rounds(edges)  # tiny graph -> driver regime
-    loop = G.kcore_rounds(edges, driver_peel=False)
+    spark.conf.set(G.KCORE_DRIVER_CONF, "false")
+    try:
+        loop = G.kcore_rounds(edges)
+    finally:
+        spark.conf.unset(G.KCORE_DRIVER_CONF)
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, loop.collect()))
     assert auto.schema == loop.schema
     # hand-computed: tail/cycle nodes peel in round 1, the clique is stable

@@ -646,6 +646,22 @@ def test_minhash_prefilter_regime_guard(spark, sf_dir):
     assert base  # non-vacuous: sf0.001 has verified near-dup pairs
 
 
+def test_minhash_distributed_fallback_matches_collect_path(spark, sf_dir, monkeypatch):
+    """Above MAX_STRONG_PAIRS the verify step runs distributed over the
+    participant-pruned, checkpointed shingle sets (the helper
+    q_minhash_est_error shares); it must return exactly the pairs of the
+    collected literal-SQL path."""
+    from kafka_error_handling_spark.datapipe import dedup as D
+
+    def rows(df):
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in df.collect())
+
+    base = rows(D.q_dedup_minhash_lsh(spark, sf_dir))
+    monkeypatch.setattr(D, "MAX_STRONG_PAIRS", 0)
+    assert rows(D.q_dedup_minhash_lsh(spark, sf_dir)) == base
+    assert base
+
+
 def test_minhash_prefilter_hint_switches_join_strategy(spark, sf_dir):
     """The regime guard is only real if the hint actually changes the
     physical plan: the broadcast variant must broadcast the signature

@@ -368,22 +368,25 @@ def test_wide_eval_cache_released_on_gc(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def n_persisted():
-        return len(spark.sparkContext._jsc.getPersistentRDDs())
+    # track only the RDD ids this call persists: caches of earlier tests
+    # may be released by GC while this one runs
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    baseline = n_persisted()
+    before = persisted_ids()
     out = search_eval_macro(docs, emb, EVAL_WIDE_QUERIES)
     assert getattr(out, "_keh_caches", None), "re-anchor protocol lost the cache"
     out.collect()
-    assert n_persisted() > baseline, "the barrier never materialized a cache"
+    created = persisted_ids() - before
+    assert created, "the barrier never materialized a cache"
     del out
     gc.collect()
     deadline = time.time() + 10
     while time.time() < deadline:
-        if n_persisted() <= baseline:
+        if not created & persisted_ids():
             break
         time.sleep(0.5)
-    assert n_persisted() <= baseline, "wide-eval cache survived GC of the result"
+    assert not created & persisted_ids(), "wide-eval cache survived GC of the result"
 
 
 def test_bm25_topk_multi_matches_single_query(spark, sf_dir):
